@@ -311,6 +311,29 @@ object Bench {
     * denominators). */
   val SlopeSlack = 1.5
 
+  /** One timed pass of a query under the bench convention: noop
+    * write, then a cache clear (caches a query persisted for its own
+    * internal reuse go, so timings stay independent and executor
+    * memory stays flat across the query loop). Right(seconds), or
+    * Left("<class>: <message>") of the failure's ROOT cause — the
+    * wrapper Spark adds around a task failure names no query-level
+    * reason. */
+  def once(spark: SparkSession,
+           fn: (SparkSession, String) => org.apache.spark.sql.DataFrame,
+           dir: String): Either[String, Double] = {
+    val t0 = System.nanoTime()
+    val failure =
+      try { fn(spark, dir).write.format("noop").mode("overwrite").save(); None }
+      catch {
+        case scala.util.control.NonFatal(e) =>
+          var root: Throwable = e
+          while (root.getCause != null && (root.getCause ne root)) root = root.getCause
+          Some(s"${root.getClass.getName}: ${root.getMessage}")
+      }
+    spark.sharedState.cacheManager.clearCache()
+    failure.toLeft((System.nanoTime() - t0) / 1e9)
+  }
+
   private def buildFixtures(spark: SparkSession, sfDir: String): Unit = {
     operators.ScalePatterns.ensureBucketed(spark, sfDir)
     operators.ScalePatterns.ensurePartitioned(spark, sfDir)
@@ -349,19 +372,13 @@ object Bench {
     val doSlope = slopeDir.nonEmpty && new java.io.File(slopeDir).isDirectory
     if (doSlope) buildFixtures(spark, slopeDir)
 
-    def once(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame,
-             dir: String): Double = {
-      val t0 = System.nanoTime()
-      val ok =
-        try {
-          fn(spark, dir).write.format("noop").mode("overwrite").save(); true
-        } catch { case scala.util.control.NonFatal(_) => false }
-      // drop caches a query persisted for its own internal reuse:
-      // timings stay independent and executor memory stays flat
-      // across the 120+ query loop
-      spark.sharedState.cacheManager.clearCache()
-      if (ok) (System.nanoTime() - t0) / 1e9 else -1.0
-    }
+    // the first failure cause per query, reported as `failed_causes`
+    val causes = scala.collection.mutable.LinkedHashMap[String, String]()
+    def timed(name: String, dir: String): Double =
+      once(spark, SparkEntry.queries(name), dir) match {
+        case Right(t) => t
+        case Left(cause) => causes.getOrElseUpdate(name, cause); -1.0
+      }
 
     // per-query wall-clock start offsets (seconds since sweep start)
     // go out as `queries_start`: when a contention episode hits
@@ -374,12 +391,12 @@ object Bench {
     // stamps can be a different box; this one cannot)
     val calibPar0 = BenchDrift.calibParMs()
     val sweepT0 = System.nanoTime()
-    val results = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
+    val results = SparkEntry.queries.keys.toSeq.sorted.map { name =>
       val start = (System.nanoTime() - sweepT0) / 1e9
-      val cold = once(fn, sfDir)
+      val cold = timed(name, sfDir)
       val warm =
         if (cold < 0) -1.0
-        else math.min(once(fn, sfDir), once(fn, sfDir)) match {
+        else math.min(timed(name, sfDir), timed(name, sfDir)) match {
           case w if w < 0 => -1.0; case w => w
         }
       (name, cold, warm, start)
@@ -388,9 +405,9 @@ object Bench {
     // only feed the ratio, never the headline numbers
     val slopeTimes: Map[String, Double] =
       if (!doSlope) Map.empty
-      else SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
-        val a = once(fn, slopeDir)
-        val b = if (a < 0) -1.0 else once(fn, slopeDir)
+      else SparkEntry.queries.keys.toSeq.sorted.map { name =>
+        val a = timed(name, slopeDir)
+        val b = if (a < 0) -1.0 else timed(name, slopeDir)
         name -> (if (a < 0 || b < 0) -1.0 else math.min(a, b))
       }.toMap
 
@@ -440,7 +457,7 @@ object Bench {
     val remeasureContended =
       calibPar0 > 0 && calibParPre / calibPar0 > BenchDrift.ParDriftMax
     val reMeasured: Map[String, Double] = drift.map { case (k, _, _) =>
-      k -> once(SparkEntry.queries(k), sfDir)
+      k -> timed(k, sfDir)
     }.toMap
     val (persistent, transient) =
       BenchDrift.splitTransient(drift, reMeasured, noisySet, remeasureContended)
@@ -472,9 +489,13 @@ object Bench {
       .map(p => r3(calibShuffle / p))
     val discounted = BenchDrift.discountDrift(calibParRatio, calibScanRatio,
       calibShuffleRatio)
+    val failedCauses = causes
+      .map { case (k, c) => Verify.jsonStr(k) + ":" + Verify.jsonStr(c) }
+      .mkString("{", ",", "}")
     val common = s""""value":$total,"unit":"sec","warm_total":$warmTotal,""" +
       s""""n_queries":${results.size},"n_failed":${results.count(_._2 < 0)},""" +
-      s""""sf":"$sfDir","failed":$failed,"noisy":$noisy,""" +
+      s""""sf":"$sfDir","failed":$failed,"failed_causes":$failedCauses,""" +
+      s""""noisy":$noisy,""" +
       s""""slope_flagged":$slopeFlagged,"warm_regressed":$driftJson,""" +
       s""""warm_transient":$transientJson,""" +
       s""""drift_discounted":$discounted,""" +

@@ -103,16 +103,21 @@ object GraftFunctions {
     * modulo-by-zero and `maxsim_score(a, b, 0)` divide-by-zero at
     * execution time otherwise. Same analysis-time contract as
     * [[intLit]]; int literals are widened so SQL callers can write
-    * bare `8` where the kernel takes bigint. */
-  private def posLongLit(fn: String, param: String, e: Expression): Expression =
+    * bare `8` where the kernel takes bigint. `max` bounds the params
+    * a kernel narrows to Int (a gram width, a dimension, a window):
+    * `token_grams(t, 4294967299)` would otherwise run as n = 3. */
+  private def posLongLit(fn: String, param: String, e: Expression,
+                         max: Long = Long.MaxValue): Expression =
     e match {
       case Literal(v: Int, IntegerType) if v > 0 => Literal(v.toLong, LongType)
-      case l @ Literal(v: Long, LongType) if v > 0 => l
+      case l @ Literal(v: Long, LongType) if v > 0 && v <= max => l
       case _ => throw new org.apache.spark.sql.AnalysisException(
         errorClass = "NON_FOLDABLE_ARGUMENT",
         messageParameters = Map("funcName" -> s"`$fn`",
           "paramName" -> s"`$param`",
-          "paramType" -> "positive \"BIGINT\" literal"))
+          "paramType" ->
+            (if (max == Long.MaxValue) "positive \"BIGINT\" literal"
+             else s"positive \"BIGINT\" literal <= $max")))
     }
 
   val all: Seq[(String, Seq[Expression] => Expression)] = Seq(
@@ -124,10 +129,10 @@ object GraftFunctions {
       graft.plans.TokenGramHashes(exprs(0), exprs(1))),
     "maxsim_score" -> ((exprs: Seq[Expression]) =>
       graft.plans.MaxSimScore(exprs(0), exprs(1),
-        posLongLit("maxsim_score", "d", exprs(2)))),
+        posLongLit("maxsim_score", "d", exprs(2), Int.MaxValue))),
     "cdc_boundaries" -> ((exprs: Seq[Expression]) =>
       graft.plans.CdcBoundaries(exprs(0),
-        posLongLit("cdc_boundaries", "w", exprs(1)),
+        posLongLit("cdc_boundaries", "w", exprs(1), Int.MaxValue),
         posLongLit("cdc_boundaries", "mask", exprs(2)))),
     "kmv_agg" -> ((exprs: Seq[Expression]) =>
       graft.plans.KmvAgg(exprs(0), intLit("kmv_agg", exprs(1)))),
@@ -145,7 +150,7 @@ object GraftFunctions {
       graft.plans.CpSum(exprs(0))),
     "token_grams" -> ((exprs: Seq[Expression]) =>
       graft.plans.TokenGrams(exprs(0),
-        posLongLit("token_grams", "n", exprs(1)))),
+        posLongLit("token_grams", "n", exprs(1), Int.MaxValue))),
     "lap_energy" -> ((exprs: Seq[Expression]) =>
       graft.plans.LapEnergy(exprs(0))),
     "phash_sketch" -> ((exprs: Seq[Expression]) =>
@@ -155,7 +160,7 @@ object GraftFunctions {
       graft.plans.PatchSums(exprs(0), intLit("patch_sums", exprs(1)))),
     "token_grams_all" -> ((exprs: Seq[Expression]) =>
       graft.plans.TokenGramsAll(exprs(0),
-        posLongLit("token_grams_all", "n", exprs(1)))),
+        posLongLit("token_grams_all", "n", exprs(1), Int.MaxValue))),
     "tok_pairs" -> ((exprs: Seq[Expression]) =>
       graft.plans.TokPairs(exprs(0))),
     "tr_surv_pairs" -> ((exprs: Seq[Expression]) =>

@@ -1,10 +1,9 @@
 package graft
 import org.apache.spark.sql.SparkSession
 
-/** Plan-shape probe for perf triage (the verify skill's "drop a
-  * temporary main" step, made permanent): prints the plan of each
-  * named SparkEntry query — grep for BroadcastHashJoin /
-  * PushedFilters / Exchange counts.
+/** Plan-shape probe for perf triage: prints the plan of each named
+  * SparkEntry query — grep for BroadcastHashJoin / PushedFilters /
+  * Exchange counts.
   *
   * Prints `explain("formatted")` (the optimization-guide §7.2 form:
   * numbered operator list + per-operator details incl. PushedFilters
@@ -21,82 +20,25 @@ object PlanProbe {
     * truncated (Scan ExistingRDD): probe these names to see the real
     * shape the checkpoint hides. */
   private def frames: Map[String, (SparkSession, String) => org.apache.spark.sql.DataFrame] = Map(
-    "bitext_margin_fused" -> ((s, d) =>
-      operators.Retrieval.marginMineWith(
-        operators.Retrieval.bitextLshPairs(s, d), fused = true, ckpt = false)),
-    "bitext_margin_join" -> ((s, d) =>
-      operators.Retrieval.marginMineWith(
-        operators.Retrieval.bitextLshPairs(s, d), fused = false, ckpt = false)),
-    "markov_relational" -> ((s, d) =>
-      queries.Behavior.markovAttributionWith(s, d, drv = false)),
+    "bitext_margin_frame" -> ((s, d) =>
+      operators.Retrieval.marginMineFrame(operators.Retrieval.bitextLshPairs(s, d))),
     "ngram_novelty_frame" -> ((s, d) =>
       queries.TextOps.ngramNoveltyFrame(s, queries.TextOps.ngramPosts(s, d))),
     "kmv_intersect_frame" -> ((s, d) =>
       operators.Sketches.kmvIntersectFrame(operators.Sketches.kmvPostings(s, d))),
-    "louvain_move_fresh" -> ((s, d) =>
-      operators.Graph.louvainMoveWith(s, d, viaPersist = false)),
-    "mm_blur_detect_hof" -> ((s, d) =>
-      operators.Multimodal.mmBlurDetectWith(s, d, kernel = false)),
-    "mm_energy_vad_hof" -> ((s, d) =>
-      operators.Multimodal.mmEnergyVadWith(s, d, kernel = false)),
-    "scene_cut_hof" -> ((s, d) =>
-      operators.Multimodal.sceneCutWith(s, d, kernel = false)),
-    "dsir_twoagg" -> ((s, d) =>
-      operators.TrainPrep.dsirWeightsWith(s, d, merged = false)),
-    "textrank_legs" -> ((s, d) =>
-      queries.TextOps.textrankKeywordsWith(s, d,
-        fused = true, stacked = false, pin = true)),
-    "leiden_refine_fresh" -> ((s, d) =>
-      operators.Graph.leidenRefineWith(s, d, viaPersist = false)),
-    "mm_phash_chain" -> ((s, d) =>
-      operators.Multimodal.mmPhashDedupWith(s, d, kernel = false, ckpt = false)),
-    "mm_phash_kernel" -> ((s, d) =>
-      operators.Multimodal.mmPhashDedupWith(s, d, kernel = true, ckpt = false)),
-    "mm_patch_embed_chain" -> ((s, d) =>
-      operators.Multimodal.mmPatchEmbedWith(s, d, kernel = false)),
-    "clip_gate_chain" -> ((s, d) =>
-      operators.Multimodal.clipGateWith(s, d, kernel = false)),
-    "mmr_relational" -> ((s, d) =>
-      operators.Retrieval.mmrDiversifyWith(s, d, drv = false)),
     "mmr_pairs_frame" -> ((s, d) =>
       operators.Retrieval.mmrCandsPairs(s, d)._2),
-    "dedup_clusters_fresh" -> ((s, d) =>
-      operators.Dedup.dedupClustersImpl(s, d, operators.Dedup.LocalClusterEdges)),
     // dedup_clusters materializes its pair list EAGERLY (count +
     // collect during construction), so the public plan shows only the
-    // withSingletons tail either way; the artifact delta lives in the
-    // PAIRS frame these two expose (fresh C2 sweep vs parquet read)
+    // withSingletons tail; the artifact delta lives in the PAIRS
+    // frame these two expose (fresh C2 sweep vs parquet read)
     "dedup_clusters_pairs_fresh" -> ((s, d) =>
       operators.Dedup.minhashLshFrame(s, d)),
     "dedup_clusters_pairs_artifact" -> ((s, d) =>
       operators.Dedup.lshPairsArtifact(s, d)),
-    "conformal_gate_fresh" -> ((s, d) =>
-      operators.TrainPrep.conformalGateWith(s, d, artifact = false)),
-    "ccnet_buckets_fresh" -> ((s, d) =>
-      operators.CorpusClean.ccnetBucketsWith(s, d, artifact = false)),
-    "quality_agreement_fresh" -> ((s, d) =>
-      operators.TrainPrep.qualityAgreementWith(s, d, artifact = false)),
-    "pareto_quality_gate_fresh" -> ((s, d) =>
-      operators.TrainPrep.paretoQualityGateWith(s, d, artifact = false)),
-    // the gate/bucket consumers checkpoint their cells during
-    // construction, so their public plans hide the scoring half
-    // either way; the artifact delta lives in the SCORES frame
-    // bpe_train collects per round, so neither form's full loop shows
-    // in one plan; these expose ONE round's pair-count frame — the
-    // row form's sort-window lead vs the array form's kernel explode
-    "bpe_round_pairs_row" -> ((s, d) => {
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy(org.apache.spark.sql.functions.col("doc_id"))
-        .orderBy(org.apache.spark.sql.functions.col("pos"))
-      import org.apache.spark.sql.functions._
-      Tables.documents(s, d).select(col("doc_id"),
-          posexplode(functions.TextFns.wsTokens(lower(col("text")))).as(Seq("pos", "w")))
-        .withColumn("w1", lead(col("w"), 1).over(w))
-        .filter(col("w1").isNotNull)
-        .groupBy(col("w"), col("w1")).agg(count(lit(1)).as("n"))
-        .orderBy(col("n").desc, col("w"), col("w1")).limit(1)
-    }),
-    "bpe_round_pairs_arr" -> ((s, d) => {
+    // bpe_train collects per round, so its loop never shows in one
+    // plan; this exposes ONE round's pair-count frame
+    "bpe_round_pairs" -> ((s, d) => {
       import org.apache.spark.sql.functions._
       Tables.documents(s, d).select(col("doc_id"),
           functions.TextFns.wsTokens(lower(col("text"))).as("ts"))
@@ -106,23 +48,11 @@ object PlanProbe {
         .orderBy(col("n").desc, col("w"), col("w1")).limit(1)
     }),
     "textrank_sp_frame" -> ((s, d) => queries.TextOps.trSpFrame(s, d)),
-    "ngram_novelty_hof" -> ((s, d) =>
-      queries.TextOps.ngramNoveltyFrame(s,
-        queries.TextOps.ngramPostsWith(s, d, hof = true))),
-    "saturation_curve_hof" -> ((s, d) =>
-      operators.TrainPrep.saturationCurveWith(s, d, hof = true)),
-    "decontaminate_win" -> ((s, d) =>
-      operators.TrainPrep.decontaminateWith(s, d, arr = false)),
-    "quantile_bins_hof" -> ((s, d) =>
-      queries.Robust.quantileBinsWith(s, d, hof = true)),
-    "dsir_weights_kernel" -> ((s, d) =>
-      operators.TrainPrep.dsirWeightsWith(s, d, merged = true, gramKernel = true)),
-    "ann_pq_unpinned" -> ((s, d) =>
-      operators.Ann.annPqWith(s, d, pin = false)),
-    "keyness_zip" -> ((s, d) =>
-      queries.TextOps.keynessFrame(queries.TextOps.keynessCellsZip(s, d))),
-    "keyness_kernel" -> ((s, d) =>
+    "keyness_frame" -> ((s, d) =>
       queries.TextOps.keynessFrame(queries.TextOps.keynessCells(s, d))),
+    // the gate/bucket consumers checkpoint their cells during
+    // construction, so their public plans hide the scoring half; the
+    // artifact delta lives in the SCORES frame these two expose
     "lm_scores_fresh" -> ((s, d) =>
       operators.CorpusClean.lmPerDoc(s, d, barrier = false)),
     "lm_scores_artifact" -> ((s, d) =>

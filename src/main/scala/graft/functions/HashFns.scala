@@ -53,85 +53,47 @@ object HashFns {
   val SimA: Seq[Long] = Seq.fill(128)(1L + simRnd.nextInt((P - 1).toInt))
   val SimB: Seq[Long] = Seq.fill(128)(simRnd.nextInt(P.toInt).toLong)
 
-  /** Portable simhash bit k of token hash `h`: parity of the SQUARE
-    * of the k-th universal-hash value g = (SimA(k)·h + SimB(k)) mod P.
-    * The square matters: with plain parity(g), the bit-flip pattern
-    * between two tokens is ≈ parity(SimA(k)·Δh) — a LINEAR function
-    * of the hash difference, so similar tokens get correlated
-    * sketches and the hamming≤7 pair volume blows up (measured
-    * sf0.01: 1426 pairs linear vs 533 squared vs 327 for an ideal
-    * 64-bit hash; the old xxhash64 sketch gave 444). parity(g² mod P)
-    * breaks the linearity ((x+c)² − x² depends on x) at the cost of
-    * one extra multiply; g < 2^30 so g² < 2^60 — no ANSI overflow.
-    * Still plain integer column algebra, replayable in ANSI SQL. */
-  def simBit(h: Column, k: Int): Column = {
-    val g = pmod(lit(SimA(k)) * h + lit(SimB(k)), lit(P))
-    (g * g) % P % 2 === 1
-  }
-
-  /** SimHash band values over PORTABLE bits (see [[simBit]]): `posts`
-    * is (id, h) with one row per (doc, token hash); result is
-    * (id, sb) with `numBands` band values of totalBits/numBands bits
-    * each (MSB-first fold, band value doubles as the LSH bucket key).
-    * Same codegen'd scalar-aggregate shape as the xxhash64 form this
-    * replaces — the `totalBits` signed bit-sums are plain `sum`
-    * aggregates with map-side combine, so the sketch costs one
-    * doc-keyed shuffle of (id, totalBits longs) partials. Widening
+  /** SimHash band values over PORTABLE bits: `posts` is (id, h) with
+    * one row per (doc, token hash); result is (id, sb) with
+    * `numBands` band values of totalBits/numBands bits each
+    * (MSB-first fold, band value doubles as the LSH bucket key). Bit
+    * k of token h is the parity of g² mod P for the k-th
+    * universal-hash value g = (SimA(k)·h + SimB(k)) mod P. The square
+    * matters: with plain parity(g), the bit-flip pattern between two
+    * tokens is ≈ parity(SimA(k)·Δh) — a LINEAR function of the hash
+    * difference, so similar tokens get correlated sketches and the
+    * hamming≤7 pair volume blows up (measured sf0.01: 1426 pairs
+    * linear vs 533 squared vs 327 for an ideal 64-bit hash; the old
+    * xxhash64 sketch gave 444). g < 2^30 so g² < 2^60 — no ANSI
+    * overflow, and the bit stays replayable in ANSI SQL. Widening
     * past 64 bits needs no extra hash lanes: bits 64..127 come from
-    * further (SimA, SimB) pairs over the same h. */
+    * further (SimA, SimB) pairs over the same h.
+    *
+    * Dispatches to the [[graft.plans.SimhashAgg]] buffer aggregate
+    * (one tight loop, totalBits longs per partial — the MinhashAgg
+    * treatment) instead of one `sum(when(bit…))` scalar aggregate per
+    * bit, which generated a giant codegen class per sketch width
+    * (OPTIMIZATION_r13.md). */
   def simhashBandsAggPortable(posts: DataFrame, idCol: String, hCol: String,
-                              totalBits: Int, numBands: Int): DataFrame =
-    simhashBandsAggPortableWith(posts, idCol, hCol, totalBits, numBands,
-      kernel = true)
-
-  /** Two A/B-able forms: `kernel = true` dispatches to the
-    * [[graft.plans.SimhashAgg]] buffer aggregate (one tight loop,
-    * totalBits longs per partial — the MinhashAgg treatment);
-    * `false` keeps the prior totalBits-scalar-aggregate plan (one
-    * `sum(when(simBit…))` per bit — a giant codegen class per sketch
-    * width). Emitted (id, sb) rows are bit-identical. */
-  def simhashBandsAggPortableWith(posts: DataFrame, idCol: String, hCol: String,
-                                  totalBits: Int, numBands: Int,
-                                  kernel: Boolean): DataFrame = {
+                              totalBits: Int, numBands: Int): DataFrame = {
     require(totalBits <= 128 && totalBits % numBands == 0)
-    val r = totalBits / numBands
-    require(r <= 63, "band value must fit a signed long")
-    if (kernel) {
-      posts.groupBy(col(idCol))
-        .agg(call_function("simhash_agg", col(hCol),
-          lit(totalBits), lit(numBands)).as("sb"))
-    } else {
-      val sums = (0 until totalBits).map(k =>
-        sum(when(simBit(col(hCol), k), 1L).otherwise(-1L)).as(s"c$k"))
-      val bandCols = (0 until numBands).map { bnd =>
-        (0 until r).foldLeft(lit(0L)) { (acc, j) =>
-          acc * 2 + when(col(s"c${bnd * r + j}") > 0, 1L).otherwise(0L)
-        }.as(s"b$bnd")
-      }
-      posts.groupBy(col(idCol))
-        .agg(sums.head, sums.tail: _*)
-        .select(col(idCol) +: bandCols: _*)
-        .select(col(idCol), array((0 until numBands).map(i => col(s"b$i")): _*).as("sb"))
-    }
+    require(totalBits / numBands <= 63, "band value must fit a signed long")
+    posts.groupBy(col(idCol))
+      .agg(call_function("simhash_agg", col(hCol),
+        lit(totalBits), lit(numBands)).as("sb"))
   }
+
+  /** Token width of the dedup shingles. Every artifact built from
+    * shingles names it in its signature string, so a width change
+    * invalidates the cached pairs instead of serving stale ones. */
+  val ShingleN = 3
 
   /** Distinct n-gram token shingles of `text` ("w1 w2 w3" strings).
-    * Docs shorter than n tokens get a single whole-doc shingle.
-    * Shipped form is the codegen [[graft.plans.TokenGrams]] kernel;
-    * `shinglesHof` keeps the interpreted column chain as the probe
-    * twin ([[graft.ABProbe]] `shingk`) — bit-identical by the kernel's
-    * contract (ScalaCheck-pinned). */
-  def shingles(text: Column, n: Int = 3): Column =
+    * Docs shorter than n tokens get a single whole-doc shingle. One
+    * codegen [[graft.plans.TokenGrams]] kernel pass (ScalaCheck-pinned
+    * against the split/slice/concat_ws chain it replaced). */
+  def shingles(text: Column, n: Int = ShingleN): Column =
     call_function("token_grams", lower(text), lit(n.toLong))
-
-  def shinglesHof(text: Column, n: Int = 3): Column = {
-    val toks = TextFns.wsTokens(lower(text))
-    when(size(toks) >= n,
-      array_distinct(
-        transform(sequence(lit(0), size(toks) - n),
-          i => concat_ws(" ", slice(toks, i + 1, lit(n))))))
-      .otherwise(array(concat_ws(" ", toks)))
-  }
 
   /** Shingle set → non-negative hashes in [0, P). */
   def shingleHashes(sh: Column): Column =
@@ -167,21 +129,10 @@ object HashFns {
     * it replaced, but without that form's giant generated aggregate
     * class (the source of 15-30× first-run Janino/JIT swings on the
     * five signature queries). Results are bit-identical
-    * (equality-spec'd against [[minhashSigAggScalar]]). */
+    * (equality-spec'd against the scalar form). */
   def minhashSigAgg(posts: DataFrame, idCol: String, hCol: String): DataFrame =
     posts.groupBy(col(idCol))
       .agg(call_function("minhash_agg", col(hCol), lit(NumHashes)).as("sig"))
-
-  /** The retired 64-scalar-aggregate formulation ([[NumHashes]] plain
-    * `min` columns, whole-stage codegen) — kept as the reference twin
-    * the MinhashAgg equality spec replays. */
-  def minhashSigAggScalar(posts: DataFrame, idCol: String, hCol: String): DataFrame = {
-    val mins = (0 until NumHashes).map(i =>
-      min(pmod(lit(A(i)) * col(hCol) + lit(B(i)), lit(P))).as(s"s$i"))
-    posts.groupBy(col(idCol))
-      .agg(mins.head, mins.tail: _*)
-      .select(col(idCol), array((0 until NumHashes).map(i => col(s"s$i")): _*).as("sig"))
-  }
 
   /** LSH band keys: signature → [[Bands]] strings "band:v1-v2-v3-v4".
     * Two docs share a key iff a whole signature band matches; P(catch)

@@ -33,62 +33,30 @@ object VecFns {
   val HashMult = 2654435761L
   val P = 1000000007L
 
-  /** PORTABLE ±1 pseudo-random sign for LSH plane k, dimension d:
-    * parity of the integer universal hash of the (plane, dim) index —
-    * exactly replayable in ANSI SQL, unlike the seeded-PRNG float
-    * hyperplanes above. k·MaxDim + d + 1 stays ≤ 2^16 for any plane
-    * count in use, so the product stays < 2^46: no ANSI overflow. */
-  def planeSign(k: Int, d: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    pmod((lit(k.toLong * MaxDim) + d + 1) * HashMult, lit(P)) % 2 === 1
-
   /** Sign-LSH bucket assignment with INTEGER arithmetic end to end:
     * embeddings are quantized to q = floor(x·10⁴ + 0.5) (the
     * emb_quantize half-up convention), each plane projection is
-    * Σ_d ±q_d with portable signs, bit r of table t = (projection of
-    * plane t·bits+r) > 0. Exact integer sums are order-independent,
-    * so Spark's unordered partial aggregation and DuckDB's scan order
-    * produce identical buckets — float projections could sign-flip
-    * near 0 between engines. Shape: one posexplode + bits·tables
-    * scalar codegen'd sum-aggregates; after map-side combine the
-    * shuffle carries (id, planes longs) partials, and the result is
-    * the exploded (id, t, b) keys ready for the (t, b) equi-join. */
+    * Σ_d ±q_d with portable signs — the sign for plane k, dimension d
+    * is the parity of ((k·MaxDim + d + 1)·HashMult) mod P, exactly
+    * replayable in ANSI SQL and < 2^46 for any plane count in use —
+    * and bit r of table t = (projection of plane t·bits+r) > 0. Exact
+    * integer sums are order-independent, so Spark's unordered partial
+    * aggregation and DuckDB's scan order produce identical buckets —
+    * float projections could sign-flip near 0 between engines. Shape:
+    * one posexplode + the [[graft.plans.SignLshAgg]] buffer aggregate
+    * (one tight planes-long loop over a tabulated sign table, planes
+    * longs per partial, instead of one scalar `sum` per plane and its
+    * giant codegen class per layout — OPTIMIZATION_r13.md); the result
+    * is the exploded (id, t, b) keys ready for the (t, b) equi-join. */
   def portableBuckets(df: DataFrame, idCol: String, vecCol: String,
                       bits: Int, tables: Int): DataFrame =
-    portableBucketsWith(df, idCol, vecCol, bits, tables, kernel = true)
-
-  /** Two A/B-able forms ([[graft.ABProbe]] `signlsh`): `kernel = true`
-    * dispatches to the [[graft.plans.SignLshAgg]] buffer aggregate
-    * (one tight planes-long loop over a tabulated sign table, planes
-    * longs per partial); `false` keeps the prior bits·tables-scalar-
-    * aggregate plan (one `sum(when(planeSign…))` per plane — a giant
-    * codegen class per layout). Emitted (id, t, b) rows are
-    * bit-identical. */
-  def portableBucketsWith(df: DataFrame, idCol: String, vecCol: String,
-                          bits: Int, tables: Int, kernel: Boolean): DataFrame = {
-    val planes = tables * bits
-    val posts = df.select(col(idCol), posexplode(col(vecCol)).as(Seq("d", "x")))
+    df.select(col(idCol), posexplode(col(vecCol)).as(Seq("d", "x")))
       .select(col(idCol), col("d"),
         floor(col("x").cast("double") * 10000 + 0.5).cast("long").as("q"))
-    if (kernel) {
-      posts.groupBy(col(idCol))
-        .agg(call_function("signlsh_agg", col("d"), col("q"),
-          lit(bits), lit(tables)).as("bs"))
-        .select(col(idCol), posexplode(col("bs")).as(Seq("t", "b")))
-    } else {
-      val projs = (0 until planes).map(k =>
-        sum(when(planeSign(k, col("d")), col("q")).otherwise(-col("q"))).as(s"p$k"))
-      val bucketCols = (0 until tables).map { t =>
-        (0 until bits).map(r =>
-          when(col(s"p${t * bits + r}") > 0, 1L << r).otherwise(0L))
-          .reduce(_ + _).as(s"b$t")
-      }
-      posts.groupBy(col(idCol)).agg(projs.head, projs.tail: _*)
-        .select(col(idCol) +: bucketCols: _*)
-        .select(col(idCol), explode(array((0 until tables).map(t =>
-          struct(lit(t).as("t"), col(s"b$t").as("b"))): _*)).as("tb"))
-        .select(col(idCol), col("tb.t").as("t"), col("tb.b").as("b"))
-    }
-  }
+      .groupBy(col(idCol))
+      .agg(call_function("signlsh_agg", col("d"), col("q"),
+        lit(bits), lit(tables)).as("bs"))
+      .select(col(idCol), posexplode(col("bs")).as(Seq("t", "b")))
 
   /** DuckDB CTEs computing the portable (vec_id, t, b) bucket keys
     * for every embedding — the literal replay of [[portableBuckets]]

@@ -317,7 +317,7 @@ object Decisions {
     * share it.
     *
     * Slope term, pinned (r11 VERDICT item 3 — 2.91 s warm, slope 5.6
-    * mid-bench): three-SF probe (TimeQ, warm min, idle box) sf0.001
+    * mid-bench): three-SF probe (QProbe, warm min, idle box) sf0.001
     * 1.32 s / sf0.01 1.08 s / sf0.1 1.75 s over 1k / 10k / 100k
     * decision rows. Fit: ≈1.0 s fixed (12-archive binaryFile scan +
     * zip decode + the 36-field parse's codegen + the window plan) +

@@ -651,9 +651,9 @@ object Ann {
     * + every constant all four paths read, so a parameter change
     * self-invalidates. The per-path operators (ann_lsh …) stay
     * fresh computations — they ARE the thing under eval; only the
-    * evals read the artifact. Measured ([[graft.ABProbe]]
-    * `annevals`, sf0.1, alternating, 4 rounds, warm med of the trio
-    * as one job): 8.19 s fresh → 1.72 s artifact (4.8×), with the
+    * evals read the artifact. Measured (SURVEY §4, sf0.1,
+    * alternating, 4 rounds, warm med of the trio as one job):
+    * 8.19 s fresh → 1.72 s artifact (4.8×), with the
     * build itself outside the timed path (the Bench fixture
     * convention). */
   val AnnRankedRoot = "target/graft_ann_ranked"
@@ -665,8 +665,8 @@ object Ann {
           s"ivf=$IvfCentroids/$IvfProbes;" +
           s"pq=$PqSubDim/$PqK/$PqProbes/$PqTopK;blocks=${Dedup.CosBlocks}")
 
-  /** The from-scratch four-path ranking union — the artifact
-    * builder (and the A-side of the ABProbe pair). */
+  /** The from-scratch four-path ranking union the artifact is
+    * written from. */
   private[graft] def annRankedFresh(s: SparkSession, dir: String): DataFrame =
     annBruteforce(s, dir)
       .select(lit("exact").as("path"), col("qid"), col("nb"), col("rnk"))
@@ -690,10 +690,9 @@ object Ann {
     s.read.parquet(ensureAnnRanked(s, dir))
       .filter(col("path") === p).select(col("qid"), col("nb"), col("rnk"))
 
-  /** The pre-r13 inline form of [[rankedOf]] — the B-side of the
-    * `annevals` ABProbe pair and the row-identity spec's witness
-    * that the artifact changes WHERE rankings come from, never what
-    * they contain. */
+  /** The pre-r13 inline form of [[rankedOf]] — the row-identity
+    * spec's witness that the artifact changes WHERE rankings come
+    * from, never what they contain. */
   private[graft] def freshRankedOf(s: SparkSession, dir: String,
                                    p: String): DataFrame = p match {
     case "exact" => annBruteforce(s, dir).select(col("qid"), col("nb"), col("rnk"))
@@ -701,24 +700,6 @@ object Ann {
     case "ivf"   => annIvf(s, dir).select(col("qid"), col("nb"), col("rnk"))
     case "pq"    => annPq(s, dir).select(col("probe_id").as("qid"),
       col("neighbor").as("nb"), col("rank").as("rnk"))
-  }
-
-  /** The eval trio reduced to one frame for the ABProbe harness:
-    * every upstream stage still runs, only a 2-column projection is
-    * written. art = artifact reads vs fresh inline rankings. */
-  private[graft] def annEvalsProbe(s: SparkSession, dir: String,
-                                   art: Boolean): DataFrame = {
-    val src: String => DataFrame =
-      if (art) rankedOf(s, dir, _) else freshRankedOf(s, dir, _)
-    annRecallFrom(src)
-      .select(concat(lit("recall_"), col("qid")).as("k"),
-        col("lsh_hits").as("v"))
-      .unionByName(ndcgEvalFrom(src)
-        .select(concat(lit("ndcg_"), col("path")).as("k"),
-          col("ndcg_pm").as("v")))
-      .unionByName(mrrEvalFrom(src)
-        .select(concat(lit("mrr_"), col("path")).as("k"),
-          col("mrr_pm").as("v")))
   }
 
   /** K-line: ANN RECALL@K calibration — per query, how many of the
@@ -988,24 +969,18 @@ object Ann {
     * sums; encoding is the same assignment; query-time cost is
     * codes ⋈ broadcast LUT (probes × K × subs rows) + one top-k
     * window per probe — the big side never exchanges. */
-  def annPq(s: SparkSession, dir: String): DataFrame =
-    annPqWith(s, dir, pin = true)
-
-  /** `pin` A/B ([[graft.ABProbe]] `pqpin`): the quantized subvector
-    * cells feed FIVE subtrees (seed centroids, two assignment passes,
-    * the re-centering aggregate, the probe slices) — persist scans
-    * the explode once; `pin = false` recomputes it per consumer. */
-  private[graft] def annPqWith(s: SparkSession, dir: String,
-                               pin: Boolean): DataFrame = {
-    val pts0 = embeddings(s, dir)
+  def annPq(s: SparkSession, dir: String): DataFrame = {
+    // the quantized subvector cells feed FIVE subtrees (seed
+    // centroids, two assignment passes, the re-centering aggregate,
+    // the probe slices): persisting scans the explode once — a warm
+    // wash, but first pass 6.4 → 3.3 s (OPTIMIZATION_r14.md row 11)
+    val pts = embeddings(s, dir)
       .select(col("vec_id"), posexplode(col("embedding")).as(Seq("d", "v")))
       .select(col("vec_id"),
         (col("d") / PqSubDim).cast("int").as("sub"),
         (col("d") % PqSubDim).as("sd"),
         floor(col("v").cast("double") * KMeansIter.Scale + 0.5).cast("long").as("qv"))
-    val pts = if (pin)
-      pts0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    else pts0
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val c0 = pts.filter(col("vec_id") < PqK)
       .select(col("vec_id").as("cid"), col("sub"), col("sd"), col("qv").as("cv"))
     def assign(c: DataFrame): DataFrame =
@@ -1921,35 +1896,14 @@ object Ann {
     * leaves its row); the only shuffle is the two-phase top-K rank.
     * At 100 TB the candidate set comes from an index (D2/D3) and
     * MaxSim re-scores candidates — exactly how ColBERT deploys. */
-  def colbertMaxsim(s: SparkSession, dir: String): DataFrame =
-    colbertMaxsimProbe(s, dir, hof = false)
-
-  /** A/B probe twin: `hof = true` is the original nested-HOF column
-    * form (aggregate → array_max → transform with element_at dots —
-    * CodegenFallback, every T² dot walks an interpreted tree);
-    * `hof = false` is the shipped codegen'd
-    * [[graft.plans.MaxSimScore]] kernel, bit-identical by the
-    * KernelPropertySpec property test and the spec's set equality.
-    * Measured via [[graft.ABProbe]] at sf0.1 (warm med): kernel wins
-    * — see SURVEY §4. */
-  private[graft] def colbertMaxsimProbe(s: SparkSession, dir: String,
-                                        hof: Boolean): DataFrame = {
+  def colbertMaxsim(s: SparkSession, dir: String): DataFrame = {
     val q4 = (c: org.apache.spark.sql.Column) =>
       transform(c, x => floor(x.cast("double") * 10000 + 0.5).cast("long"))
-    def dot4(qc: org.apache.spark.sql.Column, nc: org.apache.spark.sql.Column,
-             i: org.apache.spark.sql.Column, j: org.apache.spark.sql.Column) =
-      (0 until CbDim).map { t =>
-        element_at(qc, (i * CbDim + t + 1).cast("int")) *
-          element_at(nc, (j * CbDim + t + 1).cast("int"))
-      }.reduce(_ + _)
-    val score =
-      if (hof)
-        aggregate(sequence(lit(0), lit(CbTokens - 1)), lit(0L),
-          (acc, i) => acc + array_max(
-            transform(sequence(lit(0), lit(CbTokens - 1)),
-              j => dot4(col("qe4"), col("ne4"), i, j))))
-      else call_function("maxsim_score", col("qe4"), col("ne4"),
-        lit(CbDim.toLong))
+    // the codegen'd [[graft.plans.MaxSimScore]] kernel, not the nested
+    // aggregate/array_max/transform HOF whose T² dots each walked an
+    // interpreted tree (CodegenFallback) — SURVEY §4
+    val score = call_function("maxsim_score", col("qe4"), col("ne4"),
+      lit(CbDim.toLong))
     val qs = embeddings(s, dir).filter(col("vec_id") < NumQueries)
       .select(col("vec_id").as("qid"), q4(col("embedding")).as("qe4"))
     val scored = embeddings(s, dir)

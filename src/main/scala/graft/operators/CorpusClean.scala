@@ -534,12 +534,6 @@ object CorpusClean {
   private[graft] def lmScoresArtifact(s: SparkSession, dir: String): DataFrame =
     s.read.parquet(ensureLmScores(s, dir))
 
-  /** `artifact = false` probe twins recompute the sweep in-query —
-    * the pre-artifact cost ([[graft.ABProbe]] `lmart`). */
-  private[graft] def lmScoresWith(s: SparkSession, dir: String,
-                                  artifact: Boolean): DataFrame =
-    if (artifact) lmScoresArtifact(s, dir) else lmPerDoc(s, dir)
-
   def lmScore(s: SparkSession, dir: String): DataFrame =
     lmPerDoc(s, dir)
       .select(col("doc_id"), col("n_bigrams"), col("sum_q"),
@@ -607,18 +601,6 @@ object CorpusClean {
       .toDF("round", "left", "right", "n_pair", "n_applied")
   }
 
-  /** Report-frame twin over either ROW-frame materialization form —
-    * the ABProbe `bpe` entry and the `bpearr` row side; the report
-    * only needs the merge rows, so the final token cache is released
-    * here. */
-  private[graft] def bpeTrainProbe(s: SparkSession, dir: String,
-                                   viaPersist: Boolean): DataFrame = {
-    import s.implicits._
-    val (toksF, merges) = bpeTrainRunWith(s, dir, viaPersist)
-    if (viaPersist) { toksF.unpersist(); () }
-    merges.toDF("round", "left", "right", "n_pair", "n_applied")
-  }
-
   /** The training loop itself: returns the ENCODED token table after
     * all [[BpeTrainRounds]] merges plus the merge report rows —
     * [[bpeTrain]] reports the merges, [[ensureBpeTokens]] persists
@@ -632,15 +614,16 @@ object CorpusClean {
     * [[graft.plans.TokPairs]] kernel (a map-side projection) and the
     * merge round from [[graft.plans.BpeMerge]] — the sequential
     * greedy scanner the island-parity window chain is spec-pinned
-    * against, now AS the executable form. The row-frame loop below
-    * ([[bpeTrainRunWith]], ABProbe `bpe`/`bpearr`) paid per round: a
-    * doc-keyed sort window for lead(w) over corpus-token ROWS, then
-    * the three-window stageMerge/applyMerge chain and a re-index
-    * window; here each round is one pair-count aggregate + one
-    * map-only merge over doc-count rows. Same merges, same encoded
-    * corpus (posexplode at the end re-derives the 1-based
-    * positions), bit-for-bit — pinned by the artifact
-    * delete→rebuild spec and the kernel property specs. */
+    * against, now AS the executable form. The r13 row-frame loop
+    * paid per round: a doc-keyed sort window for lead(w) over
+    * corpus-token ROWS, then the three-window stageMerge/applyMerge
+    * chain and a re-index window; here each round is one pair-count
+    * aggregate + one map-only merge over doc-count rows — warm
+    * 6.010 → 1.794 s at sf0.1 (OPTIMIZATION_r14.md row 19). Same
+    * merges, same encoded corpus (posexplode at the end re-derives
+    * the 1-based positions), bit-for-bit — pinned by the row-form
+    * replay in CorpusCleanSpec, the artifact delete→rebuild spec and
+    * the kernel property specs. */
   /** The array-form loop core: returns the PERSISTED final token
     * arrays (caller unpersists) plus the merge report rows. */
   private def bpeLoopArr(s: SparkSession, dir: String)
@@ -693,52 +676,6 @@ object CorpusClean {
       .localCheckpoint()
     toks.unpersist()
     (out, merges)
-  }
-
-  /** The loop in two A/B-able materialization forms ([[graft.ABProbe]]
-    * `bpe`): `viaPersist = true` chains per-round persist() — the
-    * cached plan keeps its hashpartitioning(doc_id) output, so every
-    * later round's window skips the exchange a localCheckpoint (plan
-    * truncation to a partitioning-blind RDD scan) forces back in;
-    * `false` is the prior checkpoint chain. */
-  private[graft] def bpeTrainRunWith(s: SparkSession, dir: String,
-                                     viaPersist: Boolean)
-      : (DataFrame, Seq[(Int, String, String, Long, Long)]) = {
-    def mat(df: DataFrame): DataFrame =
-      if (viaPersist)
-        df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      else df.localCheckpoint()
-    val w = Window.partitionBy(col("doc_id")).orderBy(col("pos"))
-    var toks = mat(documents(s, dir).select(col("doc_id"),
-      posexplode(TextFns.wsTokens(lower(col("text")))).as(Seq("pos", "w"))))
-    // n_applied is read off TOKEN-COUNT CONSERVATION instead of a
-    // second pass: every merged occurrence (one `m` row) fuses
-    // exactly two tokens into one — the island-parity decision never
-    // marks adjacent positions, so consumed rows are distinct and
-    // tokens_removed = count(m) = n_applied. The former
-    // `staged.filter(m).count()` re-ran the whole stageMerge window
-    // chain (exchange + sort + three window passes) once for the
-    // count and AGAIN for the materialization; counting the
-    // materialized frames is a cached-partition scan instead.
-    var nToks = toks.count()
-    val merges = Seq.newBuilder[(Int, String, String, Long, Long)]
-    for (round <- 1 to BpeTrainRounds) {
-      val best = toks.withColumn("w1", lead(col("w"), 1).over(w))
-        .filter(col("w1").isNotNull)
-        .groupBy(col("w"), col("w1")).agg(count(lit(1)).as("n"))
-        .orderBy(col("n").desc, col("w"), col("w1")).limit(1)
-        .collect()(0)
-      val (l, r, n) = (best.getString(0), best.getString(1), best.getLong(2))
-      val prev = toks
-      toks = mat(applyMerge(stageMerge(toks, l, r), r))
-      val nAfter = toks.count()
-      // round k's cache is materialized; round k-1's can go (the
-      // persist chain would otherwise hold BpeTrainRounds copies)
-      if (viaPersist) { prev.unpersist(); () }
-      merges += ((round, l, r, n, nToks - nAfter))
-      nToks = nAfter
-    }
-    (toks, merges.result())
   }
 
   /** Root for the materialized ENCODED corpus (doc_id, pos, w) after
@@ -1077,14 +1014,10 @@ object CorpusClean {
     * language — at 100 TB the per-lang rank is the standard
     * distributed-sort-by-key, never a global single-partition
     * window) + a ≤ langs×3 aggregate. */
-  def ccnetBuckets(s: SparkSession, dir: String): DataFrame =
-    ccnetBucketsWith(s, dir, artifact = true)
-
-  private[graft] def ccnetBucketsWith(s: SparkSession, dir: String,
-                                      artifact: Boolean): DataFrame = {
+  def ccnetBuckets(s: SparkSession, dir: String): DataFrame = {
     val meta = documents(s, dir).select(col("doc_id"), col("lang"),
       TextFns.wsTokenCount(col("text")).cast("long").as("toks"))
-    val scored = meta.join(lmScoresWith(s, dir, artifact), Seq("doc_id"), "left_outer")
+    val scored = meta.join(lmScoresArtifact(s, dir), Seq("doc_id"), "left_outer")
       .withColumn("fq", coalesce(
         expr(s"(sum_q * 1000) div (n_bigrams * ${LmScale}L)"), lit(0L)))
     val w = Window.partitionBy(col("lang"))

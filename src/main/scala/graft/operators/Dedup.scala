@@ -26,99 +26,25 @@ object Dedup {
     * it exists to bound per-key fanout at 100 TB. */
   val DfCap = 1000
 
-  /** Distinct 3-gram shingles as (doc_id, gram) POSTINGS, built
-    * MAP-SIDE from each document's token array: nested zip_with over
-    * three shifted slices, so shingling stays whole-stage codegen
-    * with NO doc-keyed exchange — adjacency is a local array
-    * property, not a cross-row one. Docs under 3 tokens contribute
-    * their whole text as one gram (same fallback as
-    * [[graft.functions.HashFns.shingles]] and the oracle).
-    *
-    * Measured against the r8-r9 window-lead form
-    * ([[rawGramPostsWin]]) through the full C2 pipeline in one
-    * alternating [[graft.ABProbe]] session at sf0.1 (r10): warm
-    * median 3.12 vs 3.19 s, warm min 2.91 vs 3.09, first pass 5.4
-    * vs 11.3 s — the array form wins on every mark and removes the
-    * window's doc-keyed sort exchange, which only grows with
-    * corpus size. (The earlier "interpreted array lambda measured
-    * ~4×" note predates zip_with's codegen'd slice form.) */
-  /** Per-doc DISTINCT 3-gram postings — the gram-dedup family's
-    * shared input. Shipped form is one [[graft.plans.TokenGrams]]
-    * kernel pass: the kernel dedups map-side (keep-first, exactly
-    * what dropDuplicates(doc_id, gram) kept), so the zip form's
-    * distinct EXCHANGE disappears along with its interpreted
-    * nested-lambda gram build. [[rawGramPostsZip]]/[[rawGramPostsWin]]
-    * stay as probe twins ([[graft.ABProbe]] `gram`); all three emit
-    * the same (doc_id, gram) set (whole-doc gram under 3 tokens,
-    * "" for an empty doc). */
+  /** Per-doc DISTINCT [[ShingleN]]-gram postings — the gram-dedup
+    * family's shared input — in one [[graft.plans.TokenGrams]] kernel
+    * pass. The kernel dedups map-side (keep-first), so there is no
+    * doc-keyed exchange at all: the r10-r13 zip_with build paid a
+    * dropDuplicates exchange and the r8-r9 window-lead build a
+    * doc-keyed sort. At sf0.1 the kernel measured 2.485 s warm vs
+    * 2.608 (zip) and 2.813 (window), first pass 2.9 vs 4.8 vs 9.6 s
+    * (OPTIMIZATION_r14.md, "Inherited-change validation"). Docs under
+    * [[ShingleN]] tokens contribute their whole text as one gram, ""
+    * for an empty doc (same fallback as the oracle). */
   private def rawGramPosts(docs: DataFrame): DataFrame =
     docs.select(col("doc_id"),
-      explode(graft.functions.HashFns.shingles(col("text"))).as("gram"))
-
-  /** A/B probe twin: the r10-r13 shipped map-side zip_with build +
-    * dropDuplicates (interpreted lambdas; the distinct pays an
-    * exchange). */
-  private[graft] def rawGramPostsZip(docs: DataFrame): DataFrame = {
-    val ts = col("ts")
-    val g3 = zip_with(
-      zip_with(slice(ts, lit(1), size(ts) - 2), slice(ts, lit(2), size(ts) - 2),
-        (a, b) => concat(a, lit(" "), b)),
-      slice(ts, lit(3), size(ts) - 2),
-      (ab, c) => concat(ab, lit(" "), c))
-    docs
-      .select(col("doc_id"), graft.functions.TextFns.wsTokens(lower(col("text"))).as("ts"))
-      .select(col("doc_id"),
-        explode(when(size(ts) < 3, array(array_join(ts, " "))).otherwise(g3)).as("gram"))
-      .dropDuplicates("doc_id", "gram")
-  }
-
-  /** A/B probe variant of [[rawGramPosts]]: the r8-r9 window-lead
-    * build (posexplode + lead over a doc-keyed window). Kept as a
-    * probe hook so the window-vs-array choice stays re-measurable
-    * in one session ([[graft.ABProbe]]); the shipped form is the
-    * measured winner (see [[rawGramPosts]]). */
-  private[graft] def rawGramPostsWin(docs: DataFrame): DataFrame = {
-    val toks = docs.select(col("doc_id"),
-      posexplode(graft.functions.TextFns.wsTokens(lower(col("text")))).as(Seq("pos", "w")))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("doc_id")).orderBy(col("pos"))
-    val long3 = toks
-      .withColumn("w1", lead(col("w"), 1).over(w))
-      .withColumn("w2", lead(col("w"), 2).over(w))
-      .filter(col("w2").isNotNull)
-      .select(col("doc_id"), concat_ws(" ", col("w"), col("w1"), col("w2")).as("gram"))
-    val short = docs
-      .filter(size(graft.functions.TextFns.wsTokens(lower(col("text")))) < 3)
-      .select(col("doc_id"),
-        concat_ws(" ", graft.functions.TextFns.wsTokens(lower(col("text")))).as("gram"))
-    long3.unionByName(short).dropDuplicates("doc_id", "gram")
-  }
+      explode(shingles(col("text"), ShingleN)).as("gram"))
 
   /** The un-checkpointed C2 pipeline for plan probing (the
     * ngramNoveltyFrame convention — [[dedupMinhashLsh]]'s
     * localCheckpoint hides the executed plan). */
   private[graft] def minhashLshFrame(s: SparkSession, dir: String): DataFrame =
     lshPairs(gramPosts(s, dir))
-
-  /** A/B probe twin of [[dedupMinhashLsh]] over any gram build:
-    * "ker" (shipped kernel), "zip" (map-side lambdas), "win"
-    * (window leads). */
-  private[graft] def dedupMinhashLshProbe(s: SparkSession, dir: String,
-                                          form: String): DataFrame = {
-    val raw = form match {
-      case "ker" => rawGramPosts(documents(s, dir))
-      case "zip" => rawGramPostsZip(documents(s, dir))
-      case _ => rawGramPostsWin(documents(s, dir))
-    }
-    val lowDf = raw.groupBy(col("gram"))
-      .agg(count(lit(1)).as("df")).filter(col("df") <= DfCap)
-      .select(col("gram"))
-    val gp = raw.join(lowDf, "gram").select(col("doc_id"), col("gram"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val out = lshPairs(gp).localCheckpoint()
-    gp.unpersist()
-    out
-  }
 
   private def gramPosts(s: SparkSession, dir: String): DataFrame = {
     val posts = rawGramPosts(documents(s, dir))
@@ -202,10 +128,10 @@ object Dedup {
   val LshPairsRoot = "target/graft_lsh_pairs"
 
   def lshPairsPath(dir: String): String = {
-    import graft.functions.HashFns.{Bands, NumHashes, P => HashP}
+    import graft.functions.HashFns.{Bands, NumHashes, ShingleN, P => HashP}
     s"$LshPairsRoot/${new java.io.File(dir).getName}_" +
       graft.ingest.ArtifactCache.token(dir, Seq("documents"),
-        s"minhash=${NumHashes}x$HashP;bands=$Bands;df=$DfCap;j>=0.5;v1")
+        s"shingle=$ShingleN;minhash=${NumHashes}x$HashP;bands=$Bands;df=$DfCap;j>=0.5;v1")
   }
 
   /** Build the verified pair list at most once per (JVM, scale dir);
@@ -236,11 +162,11 @@ object Dedup {
   val CorpusIndexRoot = "target/graft_corpus_index"
 
   /** Constants whose change invalidates the persisted index: the
-    * minhash family (hash count, modulus), banding geometry, df cap,
-    * and the batch-split predicate. */
+    * shingle width, the minhash family (hash count, modulus), banding
+    * geometry, df cap, and the batch-split predicate. */
   private def corpusIndexSig: String = {
-    import graft.functions.HashFns.{Bands, NumHashes, P => HashP}
-    s"minhash=${NumHashes}x$HashP;bands=$Bands;df=$DfCap;newdoc=7%10"
+    import graft.functions.HashFns.{Bands, NumHashes, ShingleN, P => HashP}
+    s"shingle=$ShingleN;minhash=${NumHashes}x$HashP;bands=$Bands;df=$DfCap;newdoc=7%10"
   }
 
   def corpusIndexPath(dir: String): String =
@@ -835,7 +761,7 @@ object Dedup {
   def pairStatsPath(dir: String): String =
     s"$PairStatsRoot/${new java.io.File(dir).getName}_" +
       graft.ingest.ArtifactCache.token(dir, Seq("documents"),
-        s"dfCap=$DfCap;shingle=3")
+        s"dfCap=$DfCap;shingle=$ShingleN")
 
   /** Build the pair-stats frame at most once per (JVM, scale dir);
     * concurrent first callers serialize on the ArtifactCache lock. */
@@ -1062,8 +988,8 @@ object Dedup {
     * shares ≥1 band (pigeonhole), so candidate generation is exact
     * for the emitted set. Token hashes and bit extraction are the
     * PORTABLE family ([[graft.functions.HashFns.strHash]] +
-    * [[graft.functions.HashFns.simBit]]), so the driver's DuckDB
-    * oracle replays the sketch bit-for-bit — this was rows-only when
+    * [[graft.functions.HashFns.simhashBandsAggPortable]]), so the
+    * DuckDB oracle replays the sketch bit-for-bit — this was rows-only when
     * the bits came from xxhash64. Recall vs the planted near-dups
     * stays spec-checked. */
   def dedupSimhash(s: SparkSession, dir: String): DataFrame = {
@@ -1108,18 +1034,11 @@ object Dedup {
     * token hash, so this is fully oracle-replayable too (was
     * rows-only under the two xxhash64 lanes); recall vs planted
     * near-dups stays spec-checked like C3's. */
-  def dedupSimhashWide(s: SparkSession, dir: String): DataFrame =
-    dedupSimhashWideWith(s, dir, kernel = true)
-
-  /** ABProbe `simhash` twin: `kernel` picks the SimhashAgg buffer
-    * aggregate vs the 128-scalar-aggregate sketch plan. */
-  private[graft] def dedupSimhashWideWith(s: SparkSession, dir: String,
-                                          kernel: Boolean): DataFrame = {
+  def dedupSimhashWide(s: SparkSession, dir: String): DataFrame = {
     val toks = documents(s, dir).select(col("doc_id"),
         explode(graft.functions.TextFns.wsTokens(lower(col("text")))).as("t"))
       .select(col("doc_id"), strHash(col("t")).as("h"))
-    val sigs = graft.functions.HashFns.simhashBandsAggPortableWith(
-        toks, "doc_id", "h", 128, 8, kernel)
+    val sigs = simhashBandsAggPortable(toks, "doc_id", "h", 128, 8)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val bands = sigs.select(col("doc_id"), col("sb"), posexplode(col("sb")))
       .toDF("doc_id", "sb", "idx", "v")
@@ -1200,18 +1119,10 @@ object Dedup {
   def dedupClusters(s: SparkSession, dir: String): DataFrame =
     dedupClustersOn(s, dir, lshPairsArtifact(s, dir), LocalClusterEdges)
 
-  /** Probe twin ([[graft.ABProbe]] `cluart`): the C2 pair sweep
-    * recomputed in-query (what the default path cost before sharing
-    * [[lshPairsArtifact]] with dedup_minhash_lsh). */
-  private[graft] def dedupClustersImpl(s: SparkSession, dir: String,
-                                       localLimit: Long): DataFrame = {
-    val gp = gramPosts(s, dir)
-    val out = dedupClustersOn(s, dir, lshPairs(gp), localLimit)
-    gp.unpersist()
-    out
-  }
-
-  private def dedupClustersOn(s: SparkSession, dir: String,
+  /** Components over `pairsIn`: a local union-find when the edge
+    * list has at most `localLimit` pairs, distributed min-label
+    * rounds past it (specs pass 0 to drive the distributed path). */
+  private[graft] def dedupClustersOn(s: SparkSession, dir: String,
                               pairsIn: DataFrame,
                               localLimit: Long): DataFrame = {
     val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
@@ -1822,26 +1733,12 @@ object Dedup {
     * shuffle is the (hash)-keyed combining aggregate over 16-byte
     * keys + counters — payloads never shuffle, exactly the mm_dedup
     * posture at chunk granularity. */
-  def cdcChunks(s: SparkSession, dir: String): DataFrame =
-    cdcChunksProbe(s, dir, hof = false)
-
-  /** A/B probe twin: `hof = true` is the original per-position
-    * HOF-filter boundary scan (CodegenFallback, one w-char substring
-    * allocation + char fold per position); `hof = false` is the
-    * shipped codegen'd [[graft.plans.CdcBoundaries]] prefix-hash
-    * kernel — bit-identical (KernelPropertySpec + the row-identity
-    * spec), measured via [[graft.ABProbe]] — see SURVEY §4. */
-  private[graft] def cdcChunksProbe(s: SparkSession, dir: String,
-                                    hof: Boolean): DataFrame = {
+  def cdcChunks(s: SparkSession, dir: String): DataFrame = {
     val t = col("t")
-    val bounds =
-      if (hof)
-        when(col("len") > CdcWin, filter(
-          sequence(lit(CdcWin.toLong), col("len") - 1),
-          i => pmod(graft.functions.HashFns.strHash(
-            t.substr((i - CdcWin + 1).cast("int"), lit(CdcWin))), lit(CdcMask)) === 0))
-          .otherwise(array().cast("array<long>"))
-      else call_function("cdc_boundaries", t, lit(CdcWin.toLong), lit(CdcMask))
+    // boundaries from the codegen'd [[graft.plans.CdcBoundaries]]
+    // prefix-hash kernel, not a per-position HOF filter that allocated
+    // a w-char substring and folded it at every position (SURVEY §4)
+    val bounds = call_function("cdc_boundaries", t, lit(CdcWin.toLong), lit(CdcMask))
     val chunks = documents(s, dir)
       .select(col("doc_id"), col("text").as("t"),
         length(col("text")).cast("long").as("len"))

@@ -373,13 +373,22 @@ object Graph {
     out
   }
 
-  /** The plan of [[jaccardNeighbors]], split out so PlanSpec can
-    * assert the join shape: with `barrier = false` the ranked frame
-    * stays un-checkpointed so the rank window and cap filter remain
-    * visible below the wedge join (localCheckpoint truncates the
-    * executed plan to a Scan ExistingRDD). */
-  private[graft] def jaccardNeighborsFrame(edges: DataFrame,
-                                           barrier: Boolean = true): DataFrame = {
+  /** The plan of [[jaccardNeighbors]] over given edges. */
+  private[graft] def jaccardNeighborsFrame(edges: DataFrame): DataFrame = {
+    val (deg, ranked) = jaccardRanked(edges)
+    // adjacency-sized (like the frames already cached here); both
+    // `capped` and the 1-row `cut` report derive from it, so without
+    // a barrier the degree broadcast + rank window would execute
+    // twice — once under the cut aggregate, once on the main path
+    jaccardNeighborsOn(edges, deg, ranked.localCheckpoint())
+  }
+
+  /** Degrees and the adjacency ranked per wedge key — split out with
+    * [[jaccardNeighborsOn]] so PlanSpec can compose the plan without
+    * the checkpoint and see the rank window and cap filter below the
+    * wedge join (localCheckpoint truncates the executed plan to a
+    * Scan ExistingRDD). */
+  private[graft] def jaccardRanked(edges: DataFrame): (DataFrame, DataFrame) = {
     import org.apache.spark.sql.expressions.Window
     val adj = edges.select(col("s1").as("n"), col("s2").as("nb"))
       .unionByName(edges.select(col("s2").as("n"), col("s1").as("nb")))
@@ -389,16 +398,17 @@ object Graph {
     // uses TRUE degrees — the cap only prunes candidate generation.
     // The rank window shuffles on nb, the SAME key as the wedge join,
     // so the join reuses the partitioning instead of adding one.
-    // adjacency-sized (like the frames already cached here); both
-    // `capped` and the 1-row `cut` report derive from it, so without
-    // a barrier the degree broadcast + rank window would execute
-    // twice — once under the cut aggregate, once on the main path
-    val ranked0 = adj
+    val ranked = adj
       .join(broadcast(deg.select(col("n").as("mn"), col("deg").as("m_deg"))),
         col("n") === col("mn"))
       .withColumn("rk", row_number().over(
         Window.partitionBy(col("nb")).orderBy(col("m_deg").desc, col("n"))))
-    val ranked = if (barrier) ranked0.localCheckpoint() else ranked0
+    (deg, ranked)
+  }
+
+  /** The wedge pairs and the cut report over the ranked adjacency. */
+  private[graft] def jaccardNeighborsOn(edges: DataFrame, deg: DataFrame,
+                                        ranked: DataFrame): DataFrame = {
     val capped = ranked.filter(col("rk") <= JaccAdjCap)
       .select(col("n"), col("nb"))
     // cut report: adjacency rows the cap dropped (0 until it binds)
@@ -567,8 +577,7 @@ object Graph {
     * (o_custkey, l_suppkey). Write-once artifact (the coEdges
     * lifecycle): the lineitem⨝orders distinct is the expensive stage
     * (~5 s warm at sf0.1, measured — the whole fact join), and the
-    * link-analysis consumers ([[hitsScores]]; I10 `pagerank_iter` is
-    * the documented next swap, pending its own A/B per house rule)
+    * link-analysis consumers ([[hitsScores]], I10 `pagerank_iter`)
     * only need the ~edge-sized result. */
   val PurchasePairsRoot = "target/graft_purchase_pairs"
 
@@ -1044,35 +1053,22 @@ object Graph {
     * Candidate communities come from `adj` only — the Leiden
     * refinement restricts moves to within-parent by handing a
     * parent-filtered adjacency. Returns (labels, labels before the
-    * last sweep) so callers can report the final move count. */
+    * last sweep) so callers can report the final move count.
+    *
+    * Each round's labels are localCheckpoint'd: the eager checkpoint
+    * materializes once per round by construction. Persisting instead
+    * (the bpe_train precedent: keep the argmax aggregate's
+    * hashpartitioning(n) across rounds, skip the checkpoint job)
+    * measured much worse (sf0.1, 6 alternating rounds, warm med:
+    * louvain_move 1.39 s vs 5.26 s, leiden_refine 2.10 vs 4.34 —
+    * OPTIMIZATION_r13.md, "Measured and REJECTED"): each sweep reads
+    * the label frame THREE times (neighbor counts, community totals,
+    * stay-score join), and concurrent scans of a still-unmaterialized
+    * lazily-cached frame duplicate its compute instead of sharing it. */
   private def gainSweeps(adj: DataFrame, deg: DataFrame, mF: DataFrame,
                          start: DataFrame, rounds: Int)
-      : (DataFrame, DataFrame) =
-    gainSweepsWith(adj, deg, mF, start, rounds, viaPersist = false)
-
-  /** Round-boundary A/B ([[graft.ABProbe]] `gains`/`gainslv`):
-    * `viaPersist = true` was the bpe_train-precedent hypothesis —
-    * keep the argmax aggregate's hashpartitioning(n) across rounds
-    * and skip the per-round eager checkpoint job. MEASURED WORSE
-    * here, by a lot (r13-opt, sf0.1, 6 alternating rounds, warm med:
-    * louvain_move 1.39 s ckpt vs 5.26 s persist; leiden_refine
-    * 2.10 vs 4.34): unlike bpe's rounds (one consumer per round,
-    * an eager argmax collect forcing each cache in turn), each
-    * sweep here reads the label frame THREE times (neighbor counts,
-    * community totals, stay-score join) — concurrent scans of a
-    * still-unmaterialized lazily-cached frame duplicate its compute
-    * instead of sharing it, and the duplication compounds across
-    * rounds. The eager localCheckpoint materializes once per round
-    * by construction; it stays the shipped form. */
-  private[graft] def gainSweepsWith(adj: DataFrame, deg: DataFrame,
-                                    mF: DataFrame, start: DataFrame,
-                                    rounds: Int, viaPersist: Boolean)
       : (DataFrame, DataFrame) = {
-    def pin(df: DataFrame): DataFrame =
-      if (viaPersist)
-        df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      else df.localCheckpoint()
-    var lab = pin(start)
+    var lab = start.localCheckpoint()
     var labPrev = lab
     for (_ <- 1 to rounds) {
       val nbc = adj
@@ -1107,7 +1103,7 @@ object Graph {
         .select(col("n"),
           when(-col("bt.ns") > col("ss"), col("bt.c"))
             .otherwise(col("lab0")).as("lab"))
-      lab = pin(lab)
+        .localCheckpoint()
     }
     (lab, labPrev)
   }
@@ -1132,18 +1128,16 @@ object Graph {
       graft.ingest.ArtifactCache.token(dir, Seq("lineitem", "orders"),
         s"maxEdges=$MaxEdges|lvRounds=$LvRounds|v1")
 
-  /** The full local-move sweep computed FRESH — shared by the
-    * artifact builder and the `gainslv` probe twin (which must pay
-    * the sweep to measure it). Returns (n, lab, plab). */
-  private[graft] def lvLabelsFresh(s: SparkSession, dir: String,
-                                   viaPersist: Boolean = false): DataFrame = {
+  /** The full local-move sweep computed FRESH, as the artifact is
+    * written. Returns (n, lab, plab). */
+  private[graft] def lvLabelsFresh(s: SparkSession, dir: String): DataFrame = {
     val edges = coEdges(s, dir).localCheckpoint()
     val adj = lpaAdj(edges)
     val deg = adj.groupBy(col("n")).agg(count(lit(1)).as("deg"))
       .localCheckpoint()
     val mF = edges.agg(count(lit(1)).as("m")) // 1-row scalar frame
-    val (lab, labPrev) = gainSweepsWith(adj, deg, mF,
-      deg.select(col("n"), col("n").as("lab")), LvRounds, viaPersist)
+    val (lab, labPrev) = gainSweeps(adj, deg, mF,
+      deg.select(col("n"), col("n").as("lab")), LvRounds)
     lab.join(labPrev.withColumnRenamed("lab", "plab"), "n")
   }
 
@@ -1161,13 +1155,9 @@ object Graph {
   def louvainMove(s: SparkSession, dir: String): DataFrame =
     louvainMoveOn(s, dir, lvLabels(s, dir))
 
-  /** Probe twin ([[graft.ABProbe]] `gainslv`): the sweep computed
-    * in-query (what the default path cost before the artifact). */
-  private[graft] def louvainMoveWith(s: SparkSession, dir: String,
-                                     viaPersist: Boolean): DataFrame =
-    louvainMoveOn(s, dir, lvLabelsFresh(s, dir, viaPersist))
-
-  private def louvainMoveOn(s: SparkSession, dir: String,
+  /** The report over given (n, lab, plab) labels — specs feed it
+    * [[lvLabelsFresh]] to check the artifact against a fresh sweep. */
+  private[graft] def louvainMoveOn(s: SparkSession, dir: String,
                             labs: DataFrame): DataFrame = {
     val edges = coEdges(s, dir).localCheckpoint()
     val adj = lpaAdj(edges)
@@ -1298,8 +1288,7 @@ object Graph {
     * exposed so the spec can plant a Louvain-pathological parent
     * (a barbell labeled as ONE community) and watch it split. */
   private[graft] def leidenRefineOn(edges: DataFrame,
-                                    par: DataFrame,
-                                    viaPersist: Boolean = false): DataFrame = {
+                                    par: DataFrame): DataFrame = {
     val adj = lpaAdj(edges)
     val deg = adj.groupBy(col("n")).agg(count(lit(1)).as("deg"))
       .localCheckpoint()
@@ -1310,8 +1299,8 @@ object Graph {
       .filter(col("par") === col("pnb"))
       .select(col("n"), col("nb"))
       .localCheckpoint() // within-parent adjacency; joined every sweep
-    val (rlab, rlabPrev) = gainSweepsWith(adjP, deg, mF,
-      deg.select(col("n"), col("n").as("lab")), LrRounds, viaPersist)
+    val (rlab, rlabPrev) = gainSweeps(adjP, deg, mF,
+      deg.select(col("n"), col("n").as("lab")), LrRounds)
     val moved = rlab.join(rlabPrev.withColumnRenamed("lab", "plab"), "n")
       .agg(sum(when(col("lab") =!= col("plab"), 1L).otherwise(0L))
         .as("n_moved_last"))
@@ -1384,16 +1373,6 @@ object Graph {
   def leidenRefine(s: SparkSession, dir: String): DataFrame =
     leidenRefineOn(coEdges(s, dir).localCheckpoint(),
       lvLabels(s, dir).select(col("n"), col("lab").as("par")))
-
-  /** Probe twin: parent sweep computed in-query (the pre-artifact
-    * cost — what leiden_refine paid before sharing [[lvLabels]]). */
-  private[graft] def leidenRefineWith(s: SparkSession, dir: String,
-                                      viaPersist: Boolean): DataFrame = {
-    val edges = coEdges(s, dir).localCheckpoint()
-    val plab = lvLabelsFresh(s, dir, viaPersist)
-    leidenRefineOn(edges, plab.select(col("n"), col("lab").as("par"))
-      .localCheckpoint(), viaPersist)
-  }
 
   lazy val leidenRefineSql: String = {
     val lvCtes = gainSweepCtes("lv", "adj", LvRounds)

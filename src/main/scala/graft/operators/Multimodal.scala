@@ -134,64 +134,22 @@ object Multimodal {
     * mime, idx, v) band rows — band value doubles as the LSH bucket
     * key, exactly like [[graft.functions.HashFns.simhashBandsAggPortable]]. */
   def phashBands(s: SparkSession, dir: String): DataFrame =
-    phashBandsWith(s, dir, kernel = true)
-
-  private[graft] def phashBandsWith(s: SparkSession, dir: String,
-                                    kernel: Boolean): DataFrame = {
-    val m = phashMedia(s, dir)
+    phashMedia(s, dir)
       .withColumn("len", length(col("payload")))
-      // Spark's sequence() auto-DESCENDS when start > stop, so a
-      // zero-length payload would explode to [0, -1] — rows range()
-      // on the oracle side never produces. Guard, don't assume the
-      // corpus keeps its min-length invariant. (The kernel form needs
-      // the guard too: a 0-byte payload yields empty idxs/sb arrays
-      // where the chain emits NO row for the doc.)
+      // a 0-byte payload would yield empty idxs/sb arrays where the
+      // oracle emits NO row for the doc
       .filter(col("len") > 0)
-    if (kernel)
-      // Shipped form: the whole per-doc sketch is ONE
-      // [[graft.plans.PhashSketch]] pass over the payload bytes — no
-      // per-byte explode, no (doc, slice) aggregate, no doc-keyed
-      // re-aggregate, no interpreted HOF folds; the operator's first
-      // exchange is its consumer's. The relational chain below stays
-      // as the A/B probe twin (ABProbe `phashk`) and the kernel's
-      // definitional pin (KernelPropertySpec).
-      return m
-        .select(col("doc_id"), col("mime"),
-          call_function("phash_sketch", col("payload"),
-            lit(PhashBits), lit(PhashBandBits)).as("pb"))
-        .select(col("doc_id"), col("mime"),
-          col("pb.idxs").as("idxs"), col("pb.sb").as("sb"))
-    val bytes = m
-      .select(col("doc_id"), col("mime"), col("len"), col("payload"),
-        explode(sequence(lit(0), col("len") - 1)).as("i"))
-      .select(col("doc_id"), col("mime"), col("len"),
-        floor((col("i") * PhashBits).cast("double") / col("len")).cast("long").as("slice"),
-        ascii(decode(col("payload").substr(col("i") + 1, lit(1)), "UTF-8")).as("v"))
-    val slices = bytes.groupBy(col("doc_id"), col("mime"), col("len"), col("slice"))
-      .agg(sum(col("v")).as("sv"), count(lit(1)).as("nv"))
-    // ONE doc-keyed aggregate collects the ≤ PhashBits slice cells;
-    // the global mean, the bit tests and the band fold are then HOFs
-    // over that 64-element array. The former chain re-shuffled the
-    // cells three more times (tot groupBy + the doc join + the
-    // (doc, idx) band groupBy + the sb list groupBy in the caller) to
-    // compute what never leaves one doc's row. idxs keeps only the
-    // band indices PRESENT among slices (sparse for len < PhashBits
-    // payloads) — the exact band-row set the grouped form emitted.
-    slices
-      .groupBy(col("doc_id"), col("mime"))
-      .agg(sort_array(collect_list(
-        struct(col("slice"), col("sv"), col("nv"), col("len")))).as("sl"))
-      .withColumn("st", expr("aggregate(sl, 0L, (a, x) -> a + x.sv)"))
-      .withColumn("idxs",
-        expr(s"array_distinct(transform(sl, x -> x.slice div $PhashBandBits))"))
-      .withColumn("sb", expr(
-        s"""transform(idxs, idx ->
-           |  aggregate(filter(sl, x -> x.slice div $PhashBandBits = idx), 0L,
-           |    (a, x) -> a + (CASE WHEN x.sv * x.len > st * x.nv
-           |      THEN shiftleft(1L, CAST(${PhashBandBits - 1} - x.slice % $PhashBandBits AS INT))
-           |      ELSE 0L END)))""".stripMargin))
-      .select(col("doc_id"), col("mime"), col("idxs"), col("sb"))
-  }
+      // the whole per-doc sketch is ONE [[graft.plans.PhashSketch]]
+      // pass over the payload bytes — no per-byte explode, no (doc,
+      // slice) aggregate, no doc-keyed re-aggregate, no interpreted
+      // HOF folds; the operator's first exchange is its consumer's
+      // (OPTIMIZATION_r14.md row 13: 10 → 4 Exchange, warm
+      // 1.506 → 0.525 s)
+      .select(col("doc_id"), col("mime"),
+        call_function("phash_sketch", col("payload"),
+          lit(PhashBits), lit(PhashBandBits)).as("pb"))
+      .select(col("doc_id"), col("mime"),
+        col("pb.idxs").as("idxs"), col("pb.sb").as("sb"))
 
   /** K-line: PERCEPTUAL near-dup detection over binary payloads — the
     * near-dup complement of [[mmDedup]]'s exact-CAS accounting (a
@@ -205,16 +163,8 @@ object Multimodal {
     * (the sketch is 8 longs). Fully DuckDB-oracled; the spec proves
     * the recovered set is EXACTLY the planted (source, derived)
     * pairs — organic text near-dups stay out (see [[phashMedia]]). */
-  def mmPhashDedup(s: SparkSession, dir: String): DataFrame =
-    mmPhashDedupWith(s, dir, kernel = true)
-
-  /** A/B probe twin over either band build (ABProbe `phashk`);
-    * `ckpt = false` exposes the executed plan the public query's
-    * localCheckpoint hides (the PlanProbe convention). */
-  private[graft] def mmPhashDedupWith(s: SparkSession, dir: String,
-                                      kernel: Boolean,
-                                      ckpt: Boolean = true): DataFrame = {
-    val sigs = phashBandsWith(s, dir, kernel)
+  def mmPhashDedup(s: SparkSession, dir: String): DataFrame = {
+    val sigs = phashBands(s, dir)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // (idx, v) band rows carry the full sketch alongside — a map-side
     // zip-explode of the per-doc frame, where the former band-row
@@ -235,10 +185,9 @@ object Multimodal {
       .filter(col("hamming") <= PhashRadius)
       .dropDuplicates("ia", "ib")
       .select(col("mime"), col("ia"), col("ib"), col("hamming"))
-    if (!ckpt) return out
-    val cp = out.localCheckpoint() // pair-sized; release the cached sketches
+      .localCheckpoint() // pair-sized; release the cached sketches
     sigs.unpersist()
-    cp
+    out
   }
 
   /** DuckDB twin: same integer slice-mean bits, band fold, within-mime
@@ -309,38 +258,20 @@ object Multimodal {
     * (source, patch) cells — bounded by docs × [[PatchN]] and
     * sources × [[PatchN]]. Swapping the byte kernel for real luma
     * decode changes only the per-byte projection. */
-  def mmPatchEmbed(s: SparkSession, dir: String): DataFrame =
-    mmPatchEmbedWith(s, dir, kernel = true)
-
-  private[graft] def mmPatchEmbedWith(s: SparkSession, dir: String,
-                                      kernel: Boolean): DataFrame = {
-    val imgs = documents(s, dir).filter(col("doc_id") % 3 === 0)
+  def mmPatchEmbed(s: SparkSession, dir: String): DataFrame = {
+    // the (doc, patch) cells come out of ONE [[graft.plans.PatchSums]]
+    // pass per payload — no per-byte explode, no corpus-bytes
+    // aggregate; the first exchange is the (source, patch) roll-up
+    // below (OPTIMIZATION_r14.md row 14)
+    val perPatch = documents(s, dir).filter(col("doc_id") % 3 === 0)
       .select(col("doc_id"), col("source"),
         encode(col("text"), "UTF-8").as("payload"))
       .withColumn("len", length(col("payload")))
-      // sequence() descends on empty payloads — see phashBands
-      .filter(col("len") > 0)
-    // Shipped form: the (doc, patch) cells come out of ONE
-    // [[graft.plans.PatchSums]] pass per payload — no per-byte
-    // explode, no corpus-bytes aggregate; the first exchange is the
-    // (source, patch) roll-up below. Chain kept as the A/B probe
-    // twin (ABProbe `patchk`) and the kernel's definitional pin.
-    val perPatch =
-      if (kernel) imgs
-        .select(col("doc_id"), col("source"),
-          explode(call_function("patch_sums", col("payload"), lit(PatchN))).as("c"))
-        .select(col("doc_id"), col("source"), col("c.k").as("patch"),
-          expr("(c.sv * 1000) div c.nv").as("pm"))
-      else imgs
-        .select(col("doc_id"), col("source"), col("len"),
-          explode(sequence(lit(0), col("len") - 1)).as("i"),
-          col("payload"))
-        .select(col("doc_id"), col("source"),
-          floor((col("i") * PatchN).cast("double") / col("len")).cast("long").as("patch"),
-          ascii(decode(col("payload").substr(col("i") + 1, lit(1)), "UTF-8")).as("v"))
-        .groupBy(col("doc_id"), col("source"), col("patch"))
-        .agg(sum(col("v")).as("sv"), count(lit(1)).as("nv"))
-        .withColumn("pm", expr("(sv * 1000) div nv"))
+      .filter(col("len") > 0) // sequence() descends on empty payloads
+      .select(col("doc_id"), col("source"),
+        explode(call_function("patch_sums", col("payload"), lit(PatchN))).as("c"))
+      .select(col("doc_id"), col("source"), col("c.k").as("patch"),
+        expr("(c.sv * 1000) div c.nv").as("pm"))
     val srcPatch = perPatch.groupBy(col("source"), col("patch"))
       .agg(count(lit(1)).as("n_docs"), sum(col("pm")).as("spm"))
       .withColumn("avg_pm", expr("spm div n_docs")).drop("spm")
@@ -489,42 +420,19 @@ object Multimodal {
     * ([[graft.streaming.StreamMediaGate]]). Drops payloads shorter
     * than 3 bytes (no interior position). */
   private[graft] def withLap(df: DataFrame): DataFrame =
-    withLapWith(df, kernel = true)
-
-  /** Both Laplacian forms, A/B-able ([[graft.ABProbe]] `lapk`):
-    * `kernel = true` is the one-pass codegen [[graft.plans.LapEnergy]]
-    * code-point loop; `kernel = false` the prior interpreted HOF fold
-    * (six element_at + ascii evaluations per interior position).
-    * length(t) counts code points, exactly what size of the
-    * filtered split array counted. */
-  private[graft] def withLapWith(df: DataFrame, kernel: Boolean): DataFrame =
-    if (kernel) df
-      .filter(length(col("t")) >= 3)
+    // one codegen [[graft.plans.LapEnergy]] code-point pass instead of
+    // six interpreted element_at + ascii evaluations per interior
+    // position (OPTIMIZATION_r14.md row 4); length(t) counts code
+    // points
+    df.filter(length(col("t")) >= 3)
       .withColumn("lap_q", call_function("lap_energy", col("t")))
       .withColumn("lap_per_pos", expr("(lap_q * 1000) div (length(t) - 2)"))
-    else df
-      .withColumn("cs", expr("filter(split(t, ''), c -> c <> '')"))
-      .filter(size(col("cs")) >= 3)
-      .withColumn("lap_q", expr(
-        """aggregate(sequence(2, size(cs) - 1), 0L, (acc, i) ->
-          |  acc + CAST(ascii(element_at(cs, CAST(i - 1 AS INT)))
-          |           - 2 * ascii(element_at(cs, CAST(i AS INT)))
-          |           + ascii(element_at(cs, CAST(i + 1 AS INT))) AS BIGINT)
-          |      * CAST(ascii(element_at(cs, CAST(i - 1 AS INT)))
-          |           - 2 * ascii(element_at(cs, CAST(i AS INT)))
-          |           + ascii(element_at(cs, CAST(i + 1 AS INT))) AS BIGINT))"""
-          .stripMargin))
-      .withColumn("lap_per_pos", expr("(lap_q * 1000) div (size(cs) - 2)"))
 
   def mmBlurDetect(s: SparkSession, dir: String): DataFrame =
-    mmBlurDetectWith(s, dir, kernel = true)
-
-  private[graft] def mmBlurDetectWith(s: SparkSession, dir: String,
-                                      kernel: Boolean): DataFrame =
-    withLapWith(mediaTable(s, dir)
+    withLap(mediaTable(s, dir)
       .filter(col("meta.mime") === "image/png")
       .select(col("doc_id"), col("meta.n_bytes").as("n_bytes"),
-        decode(col("payload"), "UTF-8").as("t")), kernel)
+        decode(col("payload"), "UTF-8").as("t")))
       .select(col("doc_id"), col("n_bytes"), col("lap_q"), col("lap_per_pos"),
         (col("lap_per_pos") < BlurThresh).as("blurry"))
 
@@ -625,28 +533,17 @@ object Multimodal {
        |  (n_items * 1000 // n_total)::BIGINT AS share_permille
        |FROM b, t""".stripMargin
 
-  def mmEnergyVad(s: SparkSession, dir: String): DataFrame =
-    mmEnergyVadWith(s, dir, kernel = true)
-
-  /** Both frame-energy forms, A/B-able ([[graft.ABProbe]] `vadk`):
-    * `kernel = true` reads the Σ(cp−32)² frame energy from
-    * [[graft.plans.BandEnergies]] at bands = 1 (the audio_fingerprint
-    * kernel — band 0 of one band IS the whole-frame energy);
-    * `kernel = false` the prior interpreted HOF fold. */
-  private[graft] def mmEnergyVadWith(s: SparkSession, dir: String,
-                                     kernel: Boolean): DataFrame = {
+  def mmEnergyVad(s: SparkSession, dir: String): DataFrame = {
     val audio = mediaTable(s, dir)
       .filter(col("meta.mime") === "audio/wav")
       .select(col("doc_id"), decode(col("payload"), "UTF-8").as("t"))
       .withColumn("nf", expr(s"(length(t) + ${VadFrame - 1}) div $VadFrame"))
       // sequence() descends on empty payloads — see phashBands
       .filter(col("nf") > 0)
-    val energyCol =
-      if (kernel) element_at(call_function("band_energies", col("frame"), lit(1)), 1)
-      else aggregate(
-        filter(split(col("frame"), ""), c => c =!= ""),
-        lit(0L),
-        (acc, c) => acc + (ascii(c).cast("long") - 32L) * (ascii(c).cast("long") - 32L))
+    // the Σ(cp−32)² frame energy from [[graft.plans.BandEnergies]] at
+    // bands = 1 (band 0 of one band IS the whole-frame energy), not an
+    // interpreted HOF fold (OPTIMIZATION_r14.md row 5)
+    val energyCol = element_at(call_function("band_energies", col("frame"), lit(1)), 1)
     val frames = audio
       .select(col("doc_id"), col("nf"),
         explode(sequence(lit(0L), col("nf") - 1)).as("idx"),
@@ -735,32 +632,19 @@ object Multimodal {
     * contract), and the whole gate is rows-linear at any scale.
     * Swapping real CLIP towers changes only the two tower
     * projections. */
-  def clipGate(s: SparkSession, dir: String): DataFrame =
-    clipGateWith(s, dir, kernel = true)
-
-  private[graft] def clipGateWith(s: SparkSession, dir: String,
-                                  kernel: Boolean): DataFrame = {
-    val imgs = documents(s, dir).filter(col("doc_id") % 3 === 0)
+  def clipGate(s: SparkSession, dir: String): DataFrame = {
+    // per-doc patch cells in one [[graft.plans.PatchSums]] pass, the
+    // mmPatchEmbed form — no per-byte explode/aggregate
+    // (OPTIMIZATION_r14.md row 14)
+    val imgTower = documents(s, dir).filter(col("doc_id") % 3 === 0)
       .select(col("doc_id"), col("source"),
         encode(col("text"), "UTF-8").as("payload"))
       .withColumn("len", length(col("payload")))
-      .filter(col("len") > 0)
-    // kernel: the mmPatchEmbedWith form — per-doc cells in one pass,
-    // no per-byte explode/aggregate (ABProbe `clipk`)
-    val imgTower =
-      if (kernel) imgs
-        .select(col("doc_id"), col("source"),
-          explode(call_function("patch_sums", col("payload"), lit(PatchN))).as("c"))
-        .select(col("doc_id"), col("source"), col("c.k").as("k"),
-          expr("(c.sv * 1000) div c.nv").as("pm"))
-      else imgs
-        .select(col("doc_id"), col("source"), col("len"),
-          explode(sequence(lit(0), col("len") - 1)).as("i"), col("payload"))
-        .select(col("doc_id"), col("source"),
-          floor((col("i") * PatchN).cast("double") / col("len")).cast("long").as("k"),
-          ascii(decode(col("payload").substr(col("i") + 1, lit(1)), "UTF-8")).as("v"))
-        .groupBy(col("doc_id"), col("source"), col("k"))
-        .agg(expr("(sum(v) * 1000) div count(1)").as("pm"))
+      .filter(col("len") > 0) // sequence() descends on empty payloads
+      .select(col("doc_id"), col("source"),
+        explode(call_function("patch_sums", col("payload"), lit(PatchN))).as("c"))
+      .select(col("doc_id"), col("source"), col("c.k").as("k"),
+        expr("(c.sv * 1000) div c.nv").as("pm"))
     val txtTower = embeddings(s, dir)
       .select(col("vec_id").as("doc_id"),
         posexplode(col("embedding")).as(Seq("j", "x")))
@@ -839,23 +723,15 @@ object Multimodal {
     * by payload size, never corpus-wide); two combining aggregates
     * end the plan. At 100 TB this is the per-shard frame scan it is
     * in production, shuffle volume ∝ frames x 24 bytes. */
-  def sceneCut(s: SparkSession, dir: String): DataFrame =
-    sceneCutWith(s, dir, kernel = true)
-
-  /** Both luma-fold forms, A/B-able ([[graft.ABProbe]] `lumak`):
-    * `kernel = true` is the codegen [[graft.plans.CpSum]] code-point
-    * loop; `kernel = false` the prior interpreted HOF fold. */
-  private[graft] def sceneCutWith(s: SparkSession, dir: String,
-                                  kernel: Boolean): DataFrame = {
+  def sceneCut(s: SparkSession, dir: String): DataFrame = {
     val video = mediaTable(s, dir)
       .filter(col("meta.mime") === "video/mp4")
       .select(col("doc_id"), decode(col("payload"), "UTF-8").as("t"))
       .withColumn("nf", expr(s"(length(t) + ${SceneFrame - 1}) div $SceneFrame"))
       .filter(col("nf") > 0) // sequence() descends on empty payloads
-    val lumaBase =
-      if (kernel) call_function("cp_sum", col("frame"))
-      else aggregate(filter(split(col("frame"), ""), c => c =!= ""), lit(0L),
-        (acc, c) => acc + ascii(c).cast("long"))
+    // the codegen [[graft.plans.CpSum]] code-point loop, not an
+    // interpreted HOF fold (OPTIMIZATION_r14.md row 6)
+    val lumaBase = call_function("cp_sum", col("frame"))
     val frames = video
       .select(col("doc_id"), explode(sequence(lit(0L), col("nf") - 1)).as("idx"), col("t"))
       .withColumn("frame",
@@ -1060,32 +936,7 @@ object Multimodal {
     * equi-join with per-hash fanout ≤ C([[AfDfCap]], 2) · in-doc
     * multiplicity, then a pair-keyed vote aggregate — nothing
     * pairwise over the corpus. */
-  def audioFingerprint(s: SparkSession, dir: String): DataFrame =
-    audioFingerprintWith(s, dir, kernel = true)
-
-  /** Both band-energy forms, A/B-able ([[graft.ABProbe]] `bande`):
-    * `kernel = true` computes all [[AfBands]] energies in ONE
-    * code-point pass per frame via the codegen'd
-    * [[graft.plans.BandEnergies]]; `kernel = false` keeps the prior
-    * per-band interpreted `aggregate` HOF (bands boxed folds +
-    * bands substring/ascii evaluations per character). Energies are
-    * identical by construction — both index code points. */
-  private[graft] def audioFingerprintWith(s: SparkSession, dir: String,
-                                          kernel: Boolean): DataFrame =
-    audioFingerprintWith(s, dir, kernel, pin = false)
-
-  /** `pin` A/B ([[graft.ABProbe]] `afpin`): hypothesis was that the
-    * landmark-hash frame `fps` (df-cut aggregate + both sides of the
-    * match self-join) replays its pipeline three times and a persist
-    * would share it. MEASURED WORSE WARM (r14, 6 alternating rounds,
-    * sf0.1: med 2.055 s pinned vs 1.799 unpinned; first pass 4.4 vs
-    * 8.9) — exchange reuse already shares the identical subtrees and
-    * the cache write + partitioning-blind cache scans cost more than
-    * the leftover replay. Unpinned stays shipped; the gainSweeps
-    * persist lesson again. */
-  private[graft] def audioFingerprintWith(s: SparkSession, dir: String,
-                                          kernel: Boolean,
-                                          pin: Boolean): DataFrame = {
+  def audioFingerprint(s: SparkSession, dir: String): DataFrame = {
     val base = mediaTable(s, dir)
       .filter(col("meta.mime") === "audio/wav")
       .select(col("doc_id"), decode(col("payload"), "UTF-8").as("t"))
@@ -1100,15 +951,11 @@ object Multimodal {
         col("t"))
       .withColumn("frame",
         expr(s"substring(t, CAST(idx * $AfFrame + 1 AS INT), $AfFrame)"))
-    def bandE(b: Int) = when(length(col("frame")) >= b + 1, expr(
-      s"""aggregate(sequence(CAST(${b + 1} AS INT), CAST(length(frame) AS INT), 4), 0L,
-         |(acc, p) -> acc + (ascii(substring(frame, p, 1)) - 32L)
-         |          * (ascii(substring(frame, p, 1)) - 32L))""".stripMargin))
-      .otherwise(0L)
+    // all [[AfBands]] energies in ONE code-point pass per frame via
+    // the codegen'd [[graft.plans.BandEnergies]], not one interpreted
+    // `aggregate` HOF per band (OPTIMIZATION_r13.md §5)
     val cells = frames.select(col("doc_id"), col("idx"),
-      posexplode(if (kernel)
-          call_function("band_energies", col("frame"), lit(AfBands.toLong))
-        else array((0 until AfBands).map(bandE): _*))
+      posexplode(call_function("band_energies", col("frame"), lit(AfBands.toLong)))
         .as(Seq("band", "energy")))
     val wBand = org.apache.spark.sql.expressions.Window
       .partitionBy(col("doc_id"), col("band")).orderBy(col("idx"))
@@ -1134,13 +981,15 @@ object Multimodal {
         s"""((((b1 * $AfBands + b2) * ${AfTz + 1} + dt) * 1048576
            | + least(e1, 1048575L)) * 1048576
            | + least(e2, 1048575L))""".stripMargin).as("h"))
-    val fpsP = if (pin)
-      fps.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    else fps
-    val rare = fpsP.groupBy(col("h"))
+    // fps feeds the df cut and both sides of the match self-join, yet
+    // stays unpersisted: exchange reuse already shares the identical
+    // subtrees, and a persist measured worse warm (r14, sf0.1, 6
+    // alternating rounds: med 2.055 s pinned vs 1.799 unpinned —
+    // OPTIMIZATION_r14.md, "Negative results")
+    val rare = fps.groupBy(col("h"))
       .agg(countDistinct(col("doc_id")).as("dfh"))
       .filter(col("dfh") <= AfDfCap).select(col("h"))
-    val kept = fpsP.join(rare, "h")
+    val kept = fps.join(rare, "h")
     val votes = kept.as("x").join(kept.as("y"),
         col("x.h") === col("y.h") && col("x.doc_id") < col("y.doc_id"))
       .groupBy(col("x.doc_id").as("da"), col("y.doc_id").as("db"),

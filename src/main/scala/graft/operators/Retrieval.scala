@@ -186,73 +186,42 @@ object Retrieval {
     * bipartite blocked join and [[bitextMineLsh]]'s sign-LSH bucket
     * collisions produce the same pair schema, and everything from
     * the top-k neighborhood sums to the per-y best-margin admission
-    * is this one function. Persists the pair frame (three consumers:
-    * two neighborhood windows + the final scoring join);
-    * localCheckpoints the ∝-non-en-docs result before releasing it. */
+    * is this one function. localCheckpoints the ∝-non-en-docs
+    * result. */
   private[graft] def marginMine(pairsIn: DataFrame): DataFrame =
-    marginMineWith(pairsIn, fused = true)
+    marginMineFrame(pairsIn).localCheckpoint()
 
-  /** Both margin forms, A/B-able ([[graft.ABProbe]] `margin`):
-    * `fused = true` computes each side's top-[[BtK]] neighborhood sum
-    * as a conditional window sum SHARING the rank window's partition
-    * key, and the best-margin pick rides the vb partitioning the syb
-    * window just established — the pair frame flows ONCE through
-    * hash(va) then hash(vb) (2 exchanges, 0 joins, no persist)
-    * where the unfused form pays 5 pair-frame exchanges (two rank
-    * windows, two group-sum re-joins, the best window) plus the
-    * cache round-trip. Row algebra is unchanged: sum(c4 | rank ≤ K)
-    * over the partition equals the filtered groupBy, and the inner
-    * re-joins matched every row by construction (sx/sy were built
-    * from the same pairs). */
-  private[graft] def marginMineWith(pairsIn: DataFrame,
-                                    fused: Boolean,
-                                    ckpt: Boolean = true): DataFrame =
-    if (fused) {
-      val wxO = Window.partitionBy(col("va")).orderBy(col("c4").desc, col("vb"))
-      val wxA = Window.partitionBy(col("va"))
-      val wyO = Window.partitionBy(col("vb")).orderBy(col("c4").desc, col("va"))
-      val wyA = Window.partitionBy(col("vb"))
-      val wBest = Window.partitionBy(col("vb"))
-        .orderBy(col("margin_pm").desc, col("va"))
-      pairsIn
-        .withColumn("rx", row_number().over(wxO))
-        .withColumn("sxa", sum(when(col("rx") <= BtK, col("c4"))).over(wxA))
-        .withColumn("ry", row_number().over(wyO))
-        .withColumn("syb", sum(when(col("ry") <= BtK, col("c4"))).over(wyA))
-        .withColumn("margin_pm",
-          expr(s"(${2 * BtK}L * c4 * 1000) div (sxa + syb)"))
-        .withColumn("r", row_number().over(wBest))
-        .filter(col("r") === 1 && col("margin_pm") >= BtMarginFloor)
-        .select(col("vb"), col("lang"), col("va"),
-          col("c4").as("cos_q4"), col("margin_pm"))
-        // ckpt=false leaves the plan visible for PlanProbe captures
-        .transform(d => if (ckpt) d.localCheckpoint() else d)
-    } else {
-      val pairs = pairsIn
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val wx = Window.partitionBy(col("va")).orderBy(col("c4").desc, col("vb"))
-      val sx = pairs.withColumn("r", row_number().over(wx))
-        .filter(col("r") <= BtK)
-        .groupBy(col("va")).agg(sum(col("c4")).as("sxa"))
-      val wy = Window.partitionBy(col("vb")).orderBy(col("c4").desc, col("va"))
-      val sy = pairs.withColumn("r", row_number().over(wy))
-        .filter(col("r") <= BtK)
-        .groupBy(col("vb")).agg(sum(col("c4")).as("syb"))
-      val wBest = Window.partitionBy(col("vb"))
-        .orderBy(col("margin_pm").desc, col("va"))
-      val out = pairs
-        .join(sx, Seq("va")).join(sy, Seq("vb"))
-        .withColumn("margin_pm",
-          expr(s"(${2 * BtK}L * c4 * 1000) div (sxa + syb)"))
-        .withColumn("r", row_number().over(wBest))
-        .filter(col("r") === 1 && col("margin_pm") >= BtMarginFloor)
-        .select(col("vb"), col("lang"), col("va"),
-          col("c4").as("cos_q4"), col("margin_pm"))
-        // result ∝ non-en docs; release the pairs
-        .transform(d => if (ckpt) d.localCheckpoint() else d)
-      if (ckpt) { pairs.unpersist(); () }
-      out
-    }
+  /** The un-checkpointed margin plan (the ngramNoveltyFrame
+    * convention, for plan probing). Each side's top-[[BtK]]
+    * neighborhood sum is a conditional window sum SHARING the rank
+    * window's partition key, and the best-margin pick rides the vb
+    * partitioning the syb window just established — the pair frame
+    * flows ONCE through hash(va) then hash(vb) (2 exchanges, 0 joins,
+    * no persist) where the r12 form paid 5 pair-frame exchanges (two
+    * rank windows, two group-sum re-joins, the best window) plus a
+    * cache round-trip; warm med 2.34 → 1.56 s at sf0.1
+    * (OPTIMIZATION_r13.md §3). sum(c4 | rank ≤ K)
+    * over the partition equals the filtered groupBy, so the rows are
+    * the oracle's. */
+  private[graft] def marginMineFrame(pairsIn: DataFrame): DataFrame = {
+    val wxO = Window.partitionBy(col("va")).orderBy(col("c4").desc, col("vb"))
+    val wxA = Window.partitionBy(col("va"))
+    val wyO = Window.partitionBy(col("vb")).orderBy(col("c4").desc, col("va"))
+    val wyA = Window.partitionBy(col("vb"))
+    val wBest = Window.partitionBy(col("vb"))
+      .orderBy(col("margin_pm").desc, col("va"))
+    pairsIn
+      .withColumn("rx", row_number().over(wxO))
+      .withColumn("sxa", sum(when(col("rx") <= BtK, col("c4"))).over(wxA))
+      .withColumn("ry", row_number().over(wyO))
+      .withColumn("syb", sum(when(col("ry") <= BtK, col("c4"))).over(wyA))
+      .withColumn("margin_pm",
+        expr(s"(${2 * BtK}L * c4 * 1000) div (sxa + syb)"))
+      .withColumn("r", row_number().over(wBest))
+      .filter(col("r") === 1 && col("margin_pm") >= BtMarginFloor)
+      .select(col("vb"), col("lang"), col("va"),
+        col("c4").as("cos_q4"), col("margin_pm"))
+  }
 
   /** K135-LSH: the REGISTERED index-side swap for [[bitextMine]]
     * (r11 VERDICT item 4 — every other D/K-family exact baseline has
@@ -275,11 +244,6 @@ object Retrieval {
     * since the buckets are the portable integer projections. */
   def bitextMineLsh(s: SparkSession, dir: String): DataFrame =
     marginMine(bitextLshPairs(s, dir))
-
-  /** Probe twin over either margin form. */
-  private[graft] def bitextMineLshProbe(s: SparkSession, dir: String,
-                                        fused: Boolean): DataFrame =
-    marginMineWith(bitextLshPairs(s, dir), fused)
 
   private[graft] def bitextLshPairs(s: SparkSession, dir: String): DataFrame = {
     val lang = documents(s, dir).select(col("doc_id"), col("lang"))
@@ -403,61 +367,28 @@ object Retrieval {
     * candidates AND their pairwise sims persist once
     * (probe-set-sized: ≤ C·|probes| and C²·|probes| rows), and every
     * round is an integer join + argmax window over those persisted
-    * frames — nothing after the scan touches the corpus. */
-  def mmrDiversify(s: SparkSession, dir: String): DataFrame =
-    mmrDiversifyWith(s, dir, drv = true)
-
-  /** Both greedy forms, A/B-able ([[graft.ABProbe]] `mmrdrv`):
-    * `drv = true` collects the candidate scores and their pairwise
-    * sims — ≤ C·|probes| and C·(C−1)·|probes| rows BY CONSTRUCTION,
-    * corpus-size-free after the top-C window — and runs the
-    * [[MmrK]]-round greedy argmax locally (the markov_attribution
-    * bounded-collect convention). ALL float math (cosines, the ×10⁴
-    * lattice) stays in the distributed form either way; only the
-    * integer greedy moves, so rows match bit-for-bit. The relational
-    * form scheduled [[MmrK]] sequential join+window+checkpoint
-    * barriers over those constant-size frames — pure machinery at
-    * any scale. */
-  private[graft] def mmrDiversifyWith(s: SparkSession, dir: String,
-                                      drv: Boolean): DataFrame = {
+    * frames — nothing after the scan touches the corpus.
+    *
+    * The greedy rounds themselves run locally: the candidate
+    * scores and their pairwise sims are ≤ C·|probes| and
+    * C·(C−1)·|probes| rows BY CONSTRUCTION, corpus-size-free after
+    * the top-C window, so they are collected and the [[MmrK]]-round
+    * argmax runs locally (the markov_attribution bounded-collect
+    * convention). ALL float math (cosines, the ×10⁴ lattice) stays
+    * distributed; only the integer greedy moves, so rows match the
+    * relational rounds bit-for-bit. Those rounds scheduled [[MmrK]]
+    * sequential join+window+checkpoint barriers over constant-size
+    * frames — pure machinery at any scale: warm 2.256 → 0.670 s,
+    * first pass 9.77 → 1.53 s (OPTIMIZATION_r14.md row 15). */
+  def mmrDiversify(s: SparkSession, dir: String): DataFrame = {
     val (cands, pairs) = mmrCandsPairs(s, dir)
-    if (drv) {
-      val out = mmrGreedyLocal(s,
-        cands.select(col("qid"), col("nb"), col("rel4")), pairs)
-      cands.unpersist(); pairs.unpersist()
-      return out
-    }
-    val ws = Window.partitionBy(col("qid")).orderBy(col("score").desc, col("nb"))
-    // each round's pick materializes EAGERLY (<= |probes| rows): the
-    // greedy recursion otherwise re-evaluates every earlier round's
-    // join+window inside each later round's lineage — measured 11 s
-    // warm unmaterialized vs ~1 s with the checkpoint chain
-    def pick(pool: DataFrame, r: Int): DataFrame = pool
-      .withColumn("rn2", row_number().over(ws)).filter(col("rn2") === 1)
-      .select(col("qid"), col("nb"), lit(r.toLong).as("rnk"), col("score"))
-      .localCheckpoint()
-    // round 1: pure relevance (S empty -> diversity term 0)
-    var picked = pick(cands.withColumn("score", lit(MmrLambda10) * col("rel4")), 1)
-    var selected = picked.select(col("qid"), col("nb"))
-    (2 to MmrK).foreach { r =>
-      val ms = pairs
-        .join(selected.withColumnRenamed("nb", "b"), Seq("qid", "b"))
-        .groupBy(col("qid"), col("a")).agg(max(col("sim4")).as("ms"))
-        .withColumnRenamed("a", "nb")
-      val pool = cands
-        .join(selected, Seq("qid", "nb"), "left_anti")
-        .join(ms, Seq("qid", "nb"), "left_outer")
-        .na.fill(0L, Seq("ms"))
-        .withColumn("score",
-          lit(MmrLambda10) * col("rel4") - lit(10 - MmrLambda10) * col("ms"))
-      val p = pick(pool, r)
-      picked = picked.unionByName(p)
-      selected = selected.unionByName(p.select(col("qid"), col("nb")))
-    }
-    picked
+    val out = mmrGreedyLocal(s,
+      cands.select(col("qid"), col("nb"), col("rel4")), pairs)
+    cands.unpersist(); pairs.unpersist()
+    out
   }
 
-  /** The distributed half both greedy forms share — top-[[MmrC]]
+  /** The distributed half of [[mmrDiversify]] — top-[[MmrC]]
     * cosine candidates per probe (broadcast probes, one corpus scan)
     * and their pairwise sims, both persisted (probe-set-sized). */
   private[graft] def mmrCandsPairs(s: SparkSession, dir: String): (DataFrame, DataFrame) = {
@@ -491,11 +422,10 @@ object Retrieval {
     (cands, pairs)
   }
 
-  /** Driver-side twin of the [[MmrK]]-round greedy over the SAME
-    * prepared (qid, nb, rel4) candidates and (qid, a, b, sim4) sims:
-    * identical integer lattice, identical (score DESC, nb ASC)
-    * argmax, identical round-r pool algebra — returns the same
-    * (qid, nb, rnk, score) rows. */
+  /** The [[MmrK]]-round greedy, run locally over the prepared
+    * (qid, nb, rel4) candidates and (qid, a, b, sim4) sims: integer
+    * lattice, (score DESC, nb ASC) argmax, round-r pool algebra of
+    * the oracle — emits (qid, nb, rnk, score) rows. */
   private[graft] def mmrGreedyLocal(s: SparkSession, cands: DataFrame,
                                     pairs: DataFrame): DataFrame = {
     import s.implicits._

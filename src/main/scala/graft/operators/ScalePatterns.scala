@@ -429,21 +429,7 @@ object ScalePatterns {
     Seq("l_linenumber", "l_returnflag", "l_linestatus", "l_shipdate",
       "l_suppkey", "l_quantity")
 
-  def encodingAdvisor(s: SparkSession, dir: String): DataFrame =
-    encodingAdvisorWith(s, dir, expand = false)
-
-  /** Both distinct-pass forms, A/B-able ([[graft.ABProbe]] `encadv`):
-    * `expand = false` (shipped) runs one single-distinct two-phase
-    * aggregate per column — six pruned scans; `expand = true` asks for
-    * all six count_distincts in ONE aggregate, which Catalyst plans as
-    * an Expand (6× row multiply) over one scan. The Expand form was
-    * the measured trap on the r11 box; r14 re-measured it on this box
-    * (guide §4.2) — still worse warm: med 1.504 s vs 1.342 s for the
-    * six-scan form (6 alternating rounds, sf0.1), though its single
-    * scan does halve the first pass (2.05 vs 4.49). Warm wins the
-    * bench convention; six-scan stays shipped. */
-  private[graft] def encodingAdvisorWith(s: SparkSession, dir: String,
-                                         expand: Boolean): DataFrame = {
+  def encodingAdvisor(s: SparkSession, dir: String): DataFrame = {
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("l_orderkey")).orderBy(EncOrder.map(col): _*)
     val li = lineitem(s, dir)
@@ -459,15 +445,16 @@ object ScalePatterns {
     }
     val runAggs = EncCols.map(c => sum(col(s"__run_$c")).as(s"__runs_$c"))
     val base = flagged.agg(count(lit(1)).as("n_rows"), runAggs: _*)
-    val withDistincts =
-      if (expand) base.crossJoin(broadcast(
-        lineitem(s, dir).agg(
-          count_distinct(col(EncCols.head)).as(s"__nd_${EncCols.head}"),
-          EncCols.tail.map(c => count_distinct(col(c)).as(s"__nd_$c")): _*)))
-      else EncCols.foldLeft(base) { (acc, c) =>
-        acc.crossJoin(broadcast(
-          lineitem(s, dir).agg(count_distinct(col(c)).as(s"__nd_$c"))))
-      }
+    // one single-distinct aggregate per column (six pruned scans):
+    // all six count_distincts in ONE aggregate plan as an Expand (6×
+    // row multiply) over one scan, which re-measured worse warm on
+    // r14 — med 1.504 s vs 1.342 s (6 alternating rounds, sf0.1),
+    // though it halves the first pass (2.05 vs 4.49;
+    // OPTIMIZATION_r14.md, "Negative results")
+    val withDistincts = EncCols.foldLeft(base) { (acc, c) =>
+      acc.crossJoin(broadcast(
+        lineitem(s, dir).agg(count_distinct(col(c)).as(s"__nd_$c"))))
+    }
     val structs = EncCols.map { c =>
       struct(lit(c).as("column"), col("n_rows"),
         col(s"__runs_$c").as("n_runs"), col(s"__nd_$c").as("n_distinct"))

@@ -147,13 +147,14 @@ object SignLshAgg {
     new java.util.concurrent.ConcurrentHashMap[Int, Array[Array[Boolean]]]()
 
   /** signs(k)(d) = parity of pmod((k·MaxDim + d + 1)·HashMult, P) —
-    * the [[graft.functions.VecFns.planeSign]] integers, tabulated. */
+    * the plane signs of [[graft.functions.VecFns.portableBuckets]],
+    * tabulated. */
   def signTable(planes: Int): Array[Array[Boolean]] =
     cache.computeIfAbsent(planes, _ =>
       Array.tabulate(planes, MaxDim)((k, d) => signOf(k, d)))
 
   /** The un-tabulated sign — pmod handles a (theoretical) negative
-    * product the way the Catalyst pmod in planeSign does. */
+    * product the way Catalyst's pmod does. */
   def signOf(k: Int, d: Int): Boolean = {
     val m = ((k.toLong * MaxDim + d + 1) * HashMult) % P
     (if (m < 0) m + P else m) % 2 == 1

@@ -13,7 +13,7 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
   * [[MinhashAgg]] treatment applied to the simhash sketch: the
   * buffer is the running signed bit-count vector
   * `cnt[k] += parity((SimA_k·h + SimB_k mod P)² mod P) ? 1 : -1`
-  * (the [[graft.functions.HashFns.simBit]] family, identical
+  * (the [[graft.functions.HashFns.simhashBandsAggPortable]] bits, identical
   * coefficients and integer ops the DuckDB oracle replays as literal
   * arrays), and eval folds the counts into `numBands` MSB-first band
   * longs — bit-identical to the `totalBits`-scalar-aggregate form it

@@ -1,7 +1,7 @@
 package graft.queries
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.expressions.{Window, WindowSpec}
 import org.apache.spark.sql.functions._
 import graft.Tables._
 import graft.Portable.pround
@@ -174,16 +174,26 @@ object Analytics {
       |  floor((sum(CAST(value AS DECIMAL(28,2)))::DOUBLE) * 10000.0 + 0.5) / 10000.0 AS sum_value
       |FROM events GROUP BY 1, 2""".stripMargin
 
+  /** The B6 session gap: an event more than this long after the
+    * user's previous event opens a new session. */
+  val SessionGapMicros: Long = 1800L * 1000000L
+
+  /** 1 where an event opens a new B6 session, else 0, over the
+    * user-keyed event-time window `byUser`. The gap is compared in
+    * whole microseconds (the `ts` resolution), so it agrees with the
+    * oracles' fractional epoch() difference; a cast to seconds would
+    * floor both ends and keep events 1800.05 s apart in one session. */
+  private[graft] def newSession(byUser: WindowSpec): Column =
+    when(unix_micros(col("ts")) - lag(unix_micros(col("ts")), 1).over(byUser)
+      > SessionGapMicros, 1).otherwise(0)
+
   /** B6: gap-based sessionization (30 min) via lag + running sum —
     * one shuffle on user_id, both windows share it. */
   def sessionize(s: SparkSession, dir: String): DataFrame = {
     val byUser = Window.partitionBy(col("user_id"))
       .orderBy(col("ts"), col("event_id"))
-    val newSess = when(
-      col("ts").cast("long") - lag(col("ts"), 1).over(byUser).cast("long") > 1800, 1)
-      .otherwise(0)
     events(s, dir)
-      .withColumn("new_sess", newSess)
+      .withColumn("new_sess", newSession(byUser))
       .withColumn("sess_id", sum(col("new_sess"))
         .over(byUser.rowsBetween(Window.unboundedPreceding, 0)))
       .groupBy(col("user_id"), col("sess_id"))

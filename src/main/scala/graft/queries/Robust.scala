@@ -32,13 +32,11 @@ object Robust {
     * `size(filter(edges, e -> v > e))` evaluates an interpreted
     * ArrayFilter lambda PER ROW of the binning scan (guide §4.1);
     * unrolling the ≤ Bins−1 comparisons keeps the whole projection in
-    * whole-stage codegen. Null edge cells count 0 in both forms (the
-    * lambda's null compare is filtered, the when() falls through).
-    * `hof = true` keeps the prior form ([[graft.ABProbe]] `bink`). */
-  private def binOf(v: Column, edges: Column, n: Int,
-                    hof: Boolean = false): Column =
-    if (hof) size(filter(edges, e => v > e))
-    else (1 to n).map(i =>
+    * whole-stage codegen (OPTIMIZATION_r14.md row 7: quantile_bins
+    * warm 2.051 → 1.735 s). A null edge cell counts 0 (the when()
+    * falls through). */
+  private def binOf(v: Column, edges: Column, n: Int): Column =
+    (1 to n).map(i =>
       when(v > element_at(edges, i), 1).otherwise(0)).reduce(_ + _)
 
   /** Exact interpolated percentiles over bounded value-grid cells.
@@ -113,18 +111,14 @@ object Robust {
     * then counts the edges below it, so binning is map-side and the
     * only rows-scale shuffles are the cell count and the final
     * per-bin aggregate. The same shape holds verbatim at 100 TB. */
-  def quantileBins(s: SparkSession, dir: String): DataFrame =
-    quantileBinsWith(s, dir, hof = false)
-
-  private[graft] def quantileBinsWith(s: SparkSession, dir: String,
-                                      hof: Boolean): DataFrame = {
+  def quantileBins(s: SparkSession, dir: String): DataFrame = {
     val cells = lineitem(s, dir)
       .groupBy(col("l_extendedprice")).agg(count(lit(1)).as("cnt"))
     val edges = gridPct(cells, Nil, "l_extendedprice", edgePs)
       .select(array(edgePs.map(p => col(p._2)): _*).as("edges"))
     lineitem(s, dir).select(col("l_extendedprice")).crossJoin(broadcast(edges))
       .withColumn("bin",
-        binOf(col("l_extendedprice"), col("edges"), edgePs.size, hof))
+        binOf(col("l_extendedprice"), col("edges"), edgePs.size))
       .groupBy(col("bin"))
       .agg(count(lit(1)).as("n_rows"),
         graft.Portable.pround(min(col("l_extendedprice")), 4).as("lo"),

@@ -633,30 +633,17 @@ object TextOps {
     out
   }
 
-  /** The (source, bigram) occurrence cells for [[keynessTerms]] —
-    * bigrams are built MAP-SIDE from each document's token array
-    * (zip_with over the two shifted slices, the oracle's own
-    * list-comprehension shape), so the only rows-scale shuffle in
-    * the whole operator is the (source, gram) cell aggregate. The r8
-    * form paired tokens with a lead over a doc-keyed window, which
-    * forced a full token-stream exchange BEFORE any aggregation —
-    * strictly worse at every scale, since adjacency is a local
-    * array property, not a cross-row one.
-    *
-    * The r9 swap shipped without the house one-session A/B and the
-    * judge flagged it ("0.82 → 1.83 warm"); the r10 A/B
-    * ([[graft.ABProbe]] `keyness`, alternating passes, sf0.1)
-    * vindicates the swap: zip_with warm med/min 1.16/1.13 s vs the
-    * window form's 1.34/1.22 — the judge-r8 0.82 s mark came from
-    * an outlier-fast bench run (builder-box r8-close measured the
-    * WINDOW form at 1.72 s warm mid-bench; see SURVEY §4). */
-  /** Shipped form: bigram instances from the one-pass
-    * [[graft.plans.TokenGramsAll]] kernel — same (source, gram)
-    * multiset as the zip_with chain (the kernel emits the sliding
-    * grams in order, multiplicity kept; < 2-token docs yield an
-    * empty array exactly where the chain's size guard dropped them),
-    * without the interpreted slice/concat lambda per gram. Chain and
-    * window forms stay as probe twins ([[graft.ABProbe]] `keyness`). */
+  /** The (source, bigram) occurrence cells for [[keynessTerms]]:
+    * bigram instances come MAP-SIDE from the one-pass
+    * [[graft.plans.TokenGramsAll]] kernel (sliding grams in order,
+    * multiplicity kept; < 2-token docs yield an empty array), so the
+    * only rows-scale shuffle in the whole operator is the
+    * (source, gram) cell aggregate. The r8 form paired tokens with a
+    * lead over a doc-keyed window, which forced a full token-stream
+    * exchange BEFORE any aggregation; the r9-r13 zip_with chain paid
+    * an interpreted slice/concat lambda per gram. Warm 0.994 → 0.684 s
+    * against the chain (OPTIMIZATION_r14.md row 18); the chain had
+    * beaten the window 1.16 vs 1.34 s warm med at sf0.1 (SURVEY §4). */
   private[graft] def keynessCells(s: SparkSession, dir: String): DataFrame =
     documents(s, dir)
       .select(col("source"),
@@ -664,34 +651,6 @@ object TextOps {
           lower(col("text")), lit(2L))).as("gram"))
       .groupBy(col("source"), col("gram"))
       .agg(count(lit(1)).as("a"))
-
-  /** A/B probe twin: the r9-r13 shipped zip_with instance chain. */
-  private[graft] def keynessCellsZip(s: SparkSession, dir: String): DataFrame =
-    documents(s, dir)
-      .select(col("source"), TextFns.wsTokens(lower(col("text"))).as("ts"))
-      .filter(size(col("ts")) >= 2) // slice length must be >= 0
-      .select(col("source"), explode(zip_with(
-        slice(col("ts"), lit(1), size(col("ts")) - 1),
-        slice(col("ts"), lit(2), size(col("ts")) - 1),
-        (a, b) => concat(a, lit(" "), b))).as("gram"))
-      .groupBy(col("source"), col("gram"))
-      .agg(count(lit(1)).as("a"))
-
-  /** A/B probe variant of [[keynessCells]]: the r8 doc-keyed
-    * window-lead bigram build, kept re-measurable in one session
-    * ([[graft.ABProbe]]) per the measure-don't-guess rule — the r9
-    * zip_with swap shipped without the A/B and the judge flagged it. */
-  private[graft] def keynessCellsWin(s: SparkSession, dir: String): DataFrame = {
-    val toks = documents(s, dir).select(col("source"), col("doc_id"),
-      posexplode(TextFns.wsTokens(lower(col("text")))).as(Seq("pos", "w")))
-    val wDoc = Window.partitionBy(col("doc_id")).orderBy(col("pos"))
-    toks
-      .withColumn("w1", lead(col("w"), 1).over(wDoc))
-      .filter(col("w1").isNotNull)
-      .select(col("source"), concat(col("w"), lit(" "), col("w1")).as("gram"))
-      .groupBy(col("source"), col("gram"))
-      .agg(count(lit(1)).as("a"))
-  }
 
   /** The un-checkpointed scoring plan over given cells, split out so
     * PlanSpec can assert the single-aggregation / broadcast shape
@@ -780,40 +739,19 @@ object TextOps {
     out
   }
 
-  /** Full-query probe twin over either semi-build form. */
-  private[graft] def ngramNoveltyProbe(s: SparkSession, dir: String,
-                                       dedupSemi: Boolean): DataFrame = {
-    val posts = ngramPosts(s, dir)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val out = ngramNoveltyFrameWith(s, posts, dedupSemi).localCheckpoint()
-    posts.unpersist()
-    out
-  }
-
+  /** (doc_id, source, gram) postings from the codegen `token_grams`
+    * kernel: warm 3.515 → 1.215 s against the interpreted
+    * transform/slice chain (OPTIMIZATION_r14.md row 8). */
   private[graft] def ngramPosts(s: SparkSession, dir: String): DataFrame =
-    ngramPostsWith(s, dir, hof = false)
-
-  private[graft] def ngramPostsWith(s: SparkSession, dir: String,
-                                    hof: Boolean): DataFrame =
     documents(s, dir)
       .select(col("doc_id"), col("source"),
-        explode(if (hof) graft.functions.HashFns.shinglesHof(col("text"))
-                else graft.functions.HashFns.shingles(col("text"))).as("gram"))
+        explode(graft.functions.HashFns.shingles(col("text"))).as("gram"))
 
   /** The un-checkpointed novelty plan over given postings, split out
     * so PlanSpec can assert the bloom/semi-join shape (the
     * jaccard_neighbors convention — localCheckpoint above truncates
     * the executed plan). */
-  private[graft] def ngramNoveltyFrame(s: SparkSession, posts: DataFrame): DataFrame =
-    ngramNoveltyFrameWith(s, posts, dedupSemi = true)
-
-  /** `dedupSemi` A/B ([[graft.ABProbe]] `novelty`): whether the
-    * left-semi build side pre-aggregates train grams to distinct
-    * (shrinks the sort-merge sort input ~7× at sf0.1) or hands the
-    * raw postings to the join (drops one aggregate; a semi join
-    * dedups in its own build/probe logic). Same rows either way. */
-  private[graft] def ngramNoveltyFrameWith(s: SparkSession, posts: DataFrame,
-                                           dedupSemi: Boolean): DataFrame = {
+  private[graft] def ngramNoveltyFrame(s: SparkSession, posts: DataFrame): DataFrame = {
     val trainPosts = posts.filter(col("doc_id") % 10 < 8)
     val evalPosts = posts.filter(col("doc_id") % 10 >= 8)
     // might_contain demands its bloom as a scalar subquery (H15's
@@ -829,8 +767,11 @@ object TextOps {
          |                    ${NoveltyBloomBits}L)
          |   FROM graft_novelty_train),
          |  xxhash64(gram))""".stripMargin)
-      .join(if (dedupSemi) trainPosts.select(col("gram")).distinct()
-            else trainPosts.select(col("gram")), Seq("gram"), "left_semi")
+      // the semi build pre-aggregates train grams to distinct: its
+      // ~7× smaller sort input pays for the extra aggregate (warm med
+      // 3.55 vs 3.86 s without it — OPTIMIZATION_r13.md, "Measured and
+      // REJECTED")
+      .join(trainPosts.select(col("gram")).distinct(), Seq("gram"), "left_semi")
       .groupBy(col("doc_id"), col("source"))
       .agg(count(lit(1)).as("n_seen"))
     totals
@@ -968,123 +909,47 @@ object TextOps {
     * docs shorter than k tokens contribute their single whole-text
     * gram.
     *
-    * Scale shape: gram build is map-side slices; the window fanout
-    * is a BOUNDED ×w posexplode (shuffle ∝ tokens·w with map-side
-    * combine on the (doc, window) key); fingerprint dedup and the
-    * cross-doc share join are fingerprint-sized (∝ tokens·2/(w+1)).
-    * Nothing is pairwise. */
+    * Scale shape: gram hashes come from one map-side kernel pass;
+    * the selection is ONE doc-keyed running window (shuffle ∝
+    * tokens); fingerprint dedup and the cross-doc share join are
+    * fingerprint-sized (∝ tokens·2/(w+1)). Nothing is pairwise. */
   def winnowFingerprint(s: SparkSession, dir: String): DataFrame =
-    winnowFrame(winnowFps(s, dir, fanout = false, kernel = true))
+    winnowFrame(winnowFps(s, dir))
 
-  /** The selected-fingerprint frame (doc_id, ng, h) — every plan
-    * form A/B'd via [[graft.ABProbe]] (the measure-don't-guess house
-    * rule), all forms fingerprint-set-equal by spec:
-    *  - SHIPPED: the codegen'd [[graft.plans.TokenGramHashes]] gram
-    *    kernel + ONE doc-keyed running window (max(key) over ROWS
-    *    [WinW−1 PRECEDING, CURRENT]; the frame self-truncates at
-    *    partition start, which IS the short-doc whole-window
-    *    semantics). ABProbe "winkernel": 0.80 s warm med vs 2.87 for
-    *    the column-chain gram build — 3.6×, the vec_dot lesson again
-    *    (gram strings + interpreted transform/slice/concat_ws were
-    *    ~2/3 of the operator).
-    *  - fanout = true: each gram replicated to the ≤ w window-ends
-    *    containing it, then a (doc, end) max aggregate — no sort,
-    *    but grams ×w through the shuffle. ABProbe "winnow": 3.25 vs
-    *    2.86 s — the ×w volume costs more than the doc-keyed sort
-    *    saves (the sort term grows with corpus size — rawGramPosts
-    *    r10 lesson — so fan stays re-measurable).
-    *  - tokHash = true: gram hashes composed from per-token hashes
-    *    in column algebra. ABProbe "winhash": 3.71 vs 3.04 s — the
-    *    aggregate-inside-transform nested HOF runs interpreted and
-    *    loses despite 4× less char hashing; kept as the
-    *    counter-example. (The kernel gets the same composition FOR
-    *    FREE in compiled code — that reasoning was right, the
-    *    column-algebra vehicle was wrong.) */
-  private[graft] def winnowFps(s: SparkSession, dir: String,
-                               fanout: Boolean,
-                               tokHash: Boolean = false,
-                               kernel: Boolean = false): DataFrame = {
+  /** The selected-fingerprint frame (doc_id, ng, h): the codegen'd
+    * [[graft.plans.TokenGramHashes]] gram kernel (hash values
+    * identical to char-folding each gram string, no gram strings, no
+    * HOFs, the empty-doc filter folded into the empty array) + ONE
+    * doc-keyed running window (max(key) over ROWS [WinW−1 PRECEDING,
+    * CURRENT]; the frame self-truncates at partition start, which IS
+    * the short-doc whole-window semantics). Measured at sf0.1 (warm
+    * med, SURVEY §4): 0.80 s vs 2.87 for the column-chain gram
+    * build; the oracle's ×w window fanout with a (doc, end) max
+    * aggregate read 3.25 vs 2.86 s for the window on the same chain
+    * (the ×w shuffle volume costs more than the doc-keyed sort
+    * saves); hashes composed from per-token hashes in column algebra
+    * read 3.71 vs 3.04 s (the nested HOF runs interpreted). */
+  private[graft] def winnowFps(s: SparkSession, dir: String): DataFrame = {
     val P = graft.functions.HashFns.P
-    val toks = col("toks")
-    lazy val base = documents(s, dir)
-      .select(col("doc_id"), TextFns.wsTokens(lower(col("text"))).as("toks"))
-      .filter(size(toks) > 0)
-    // two gram-hash forms, ABProbe pair "winhash": the string form
-    // builds each 4-gram string and char-folds it (every token's
-    // chars re-folded in up to k grams); the tokHash form folds each
-    // token's chars ONCE and 131-combines the k token hashes per
-    // gram (the docFingerprint outer-fold family — different hash
-    // VALUES, so shipping it would need the oracle mirrored).
-    // MEASURED (sf0.1, 3 warm rounds): str 3.04 med / 2.99 min vs
-    // tok 3.71 / 3.64 — the "4× less hashing" reasoning LOSES: the
-    // aggregate-inside-transform nested HOF runs interpreted while
-    // concat_ws + the codegen'd StrPolyHash kernel stays in codegen
-    // (the r1 sketch lesson, reconfirmed). String form ships; tok
-    // stays as the re-measurable counter-example.
-    val grams = (if (kernel)
-      // the codegen'd one-pass kernel (plans/TokenGramHashes):
-      // identical hash values to the string form, no gram strings,
-      // no HOFs, the empty-doc filter folded into the empty array
-      documents(s, dir)
-        .select(col("doc_id"),
-          call_function("token_gram_hashes",
-            lower(col("text")), lit(WinK.toLong)).as("hs"))
-        .select(col("doc_id"), size(col("hs")).cast("long").as("ng"),
-          posexplode(col("hs")).as(Seq("p", "h")))
-    else if (!tokHash)
-      base
-        .select(col("doc_id"),
-          when(size(toks) >= WinK,
-            transform(sequence(lit(0), size(toks) - WinK),
-              i => concat_ws(" ", slice(toks, i + 1, lit(WinK)))))
-            .otherwise(array(concat_ws(" ", toks))).as("gs"))
-        .select(col("doc_id"), size(col("gs")).cast("long").as("ng"),
-          posexplode(col("gs")).as(Seq("p", "g")))
-        .select(col("doc_id"), col("ng"), col("p"),
-          graft.functions.HashFns.strHash(col("g")).as("h"))
-    else {
-      def fold(arr: org.apache.spark.sql.Column) =
-        aggregate(arr, lit(0L), (acc, x) => (acc * 131 + x) % P)
-      base
-        .select(col("doc_id"),
-          transform(toks, t => graft.functions.HashFns.strHash(t)).as("ths"))
-        .select(col("doc_id"),
-          when(size(col("ths")) >= WinK,
-            transform(sequence(lit(0), size(col("ths")) - WinK),
-              i => fold(slice(col("ths"), i + 1, lit(WinK)))))
-            .otherwise(array(fold(col("ths")))).as("hs"))
-        .select(col("doc_id"), size(col("hs")).cast("long").as("ng"),
-          posexplode(col("hs")).as(Seq("p", "h")))
-    })
+    // running max over the trailing w grams: row p carries the
+    // rightmost-min of the window ENDING at p; rows with
+    // p < min(w−1, ng−1) are partial prefixes of the first full
+    // window, dropped — except the whole-doc window of a short doc,
+    // which ends at ng−1 and survives the filter
+    val wSpec = org.apache.spark.sql.expressions.Window
+      .partitionBy(col("doc_id")).orderBy(col("p"))
+      .rowsBetween(-(WinW - 1), 0)
+    documents(s, dir)
+      .select(col("doc_id"),
+        call_function("token_gram_hashes",
+          lower(col("text")), lit(WinK.toLong)).as("hs"))
+      .select(col("doc_id"), size(col("hs")).cast("long").as("ng"),
+        posexplode(col("hs")).as(Seq("p", "h")))
       .withColumn("key", expr(s"(${P}L - h) * $WinM + p"))
-    val selected =
-      if (!fanout) {
-        // running max over the trailing w grams: row p carries the
-        // rightmost-min of the window ENDING at p; rows with
-        // p < min(w−1, ng−1) are partial prefixes of the first full
-        // window, dropped — except the whole-doc window of a short
-        // doc, which ends at ng−1 and survives the filter
-        val wSpec = org.apache.spark.sql.expressions.Window
-          .partitionBy(col("doc_id")).orderBy(col("p"))
-          .rowsBetween(-(WinW - 1), 0)
-        grams
-          .withColumn("key", max(col("key")).over(wSpec))
-          .filter(col("p") >= least(lit(WinW - 1), col("ng") - 1))
-          .select(col("doc_id"), col("ng"), col("key")).distinct()
-      } else {
-        // windows: ends i span [min(w−1, ng−1), ng−1]; gram p belongs
-        // to every end in [max(p, that floor), min(p+w−1, ng−1)] —
-        // nonempty for every p, the whole-doc window when ng < w
-        grams.select(col("doc_id"), col("ng"), col("key"),
-            explode(sequence(
-              greatest(col("p"), least(lit(WinW - 1), col("ng") - 1)),
-              least(col("p") + (WinW - 1), col("ng") - 1))).as("i"))
-          .groupBy(col("doc_id"), col("ng"), col("i"))
-          .agg(max(col("key")).as("key"))
-          .select(col("doc_id"), col("ng"), col("key")).distinct()
-      }
-    selected.select(col("doc_id"), col("ng"),
-      expr(s"${graft.functions.HashFns.P}L - key div $WinM").as("h"))
+      .withColumn("key", max(col("key")).over(wSpec))
+      .filter(col("p") >= least(lit(WinW - 1), col("ng") - 1))
+      .select(col("doc_id"), col("ng"), col("key")).distinct()
+      .select(col("doc_id"), col("ng"), expr(s"${P}L - key div $WinM").as("h"))
   }
 
   /** The per-doc report over a selected-fingerprint frame. */
@@ -1469,202 +1334,35 @@ object TextOps {
     * hash-matches. Isolated candidates (no co-survivor in window)
     * settle at the 0.15 base and rank below any connected word.
     *
-    * Shape: ALL documents' graphs live in one frame keyed by
-    * (doc_id, word) — one posts explode, one position self-join
-    * (window ≤ [[TrWindow]], per-doc), then each round is one
-    * co-partitioned (doc_id, src)-keyed join + one (doc_id,
-    * dst)-keyed sum: shuffle ∝ surviving posts per round, never a
-    * per-doc loop or collect. Top-K per doc is one window rank. */
+    * Shape: one map-side pass per document — survivors and window
+    * pairs from one kernel, the rank rounds and the top-K from a
+    * second; no shuffle, no per-doc loop, no collect. */
   def textrankKeywords(s: SparkSession, dir: String): DataFrame =
-    textrankKeywordsWith(s, dir, fused = true, stacked = true, pin = true,
-      full = true)
+    // the WHOLE query is map-side: every operator of the rank tail is
+    // doc-keyed, so nothing ever needs to cross docs, and
+    // [[graft.plans.TrRank]] runs the symmetrize/weight/wdeg/rounds/
+    // top-k pipeline per doc on the [[graft.plans.TrSurvPairs]]
+    // struct. Zero exchanges, zero checkpoints: warm 3.533 → 0.373 s
+    // against the distributed rank tail (OPTIMIZATION_r14.md row 21).
+    documents(s, dir)
+      .select(col("doc_id"),
+        explode(call_function("tr_rank",
+          call_function("tr_surv_pairs", lower(col("text")),
+            lit(TrMinLen), lit(TrWindow), lit(trStops.mkString(" "))),
+          lit(TrRounds), lit(TrTopK), lit(TrScale), lit(TrBase))).as("k"))
+      .select(col("doc_id"), col("k.tok").as("tok"),
+        col("k.rnk").as("rnk"), col("k.rank_pm").as("rank_pm"))
 
-  /** Both rank-loop forms, A/B-able ([[graft.ABProbe]] `textrank`):
-    * `fused = true` carries each node's weighted degree INSIDE the
-    * rank frame (wdeg is round-invariant) and exploits the symmetric
-    * graph — every connected node has an incoming edge, so the
-    * round's contribution aggregate ALREADY covers the full connected
-    * node set and the per-round re-attach join against `nodes` is
-    * dead weight; isolated candidates settle at the 0.15 base after
-    * round 1 and are unioned back ONCE at the end. One equi-join +
-    * one combining aggregate per round (the edge frame is persisted
-    * pre-partitioned on the join key, so only the report-sized rank
-    * side exchanges per round) vs the unfused three joins + one
-    * aggregate. `fused = false` keeps the prior form. */
-  private[graft] def textrankKeywordsWith(s: SparkSession, dir: String,
-                                          fused: Boolean): DataFrame =
-    textrankKeywordsWith(s, dir, fused, stacked = true, pin = true)
-
-  /** r14 edge-builder forms, A/B-able ([[graft.ABProbe]] `trstack`,
-    * `trsurv`): `stacked = true` computes ALL [[TrWindow]] lead pairs
-    * in ONE window pass (one doc-keyed exchange + sort carrying
-    * 2·TrWindow lead functions, pairs exploded from an array) where
-    * the per-k legs each paid their own scan + window before the
-    * union; `pin = false` drops the surv localCheckpoint (with the
-    * stacked builder surv has only two consumers — the window leg and
-    * the nodes distinct — so the explode may be cheaper to recompute
-    * than to materialize). */
-  private[graft] def textrankKeywordsWith(s: SparkSession, dir: String,
-                                          fused: Boolean, stacked: Boolean,
-                                          pin: Boolean,
-                                          kernel: Boolean = false,
-                                          full: Boolean = false): DataFrame = {
-    if (full)
-      // Shipped form: the WHOLE query is map-side — every operator of
-      // the rank tail is doc-keyed, so nothing ever needs to cross
-      // docs, and [[graft.plans.TrRank]] runs the symmetrize/weight/
-      // wdeg/rounds/top-k pipeline per doc on the [[TrSurvPairs]]
-      // struct. Zero exchanges, zero checkpoints; the distributed
-      // tails below stay as probe twins (ABProbe `trker`) and the
-      // full-corpus sequential-replay spec pins the output.
-      return documents(s, dir)
-        .select(col("doc_id"),
-          explode(call_function("tr_rank",
-            call_function("tr_surv_pairs", lower(col("text")),
-              lit(TrMinLen), lit(TrWindow), lit(trStops.mkString(" "))),
-            lit(TrRounds), lit(TrTopK), lit(TrScale), lit(TrBase))).as("k"))
-        .select(col("doc_id"), col("k.tok").as("tok"),
-          col("k.rnk").as("rnk"), col("k.rank_pm").as("rank_pm"))
-    if (kernel) {
-      // Shipped form: survivors AND banded pairs from ONE
-      // [[graft.plans.TrSurvPairs]] pass per doc — no corpus-token
-      // posexplode/checkpoint, no doc-keyed sort window for the
-      // leads; the (doc, toks, pairs) frame is doc-count rows,
-      // checkpointed once (the surv-checkpoint role at a fraction of
-      // the rows). The row chain below stays as the probe twin
-      // (ABProbe `trker`).
-      val sp = trSpFrame(s, dir).localCheckpoint()
-      val nodes = sp
-        .select(col("doc_id"), explode(col("sp.toks")).as("node")).distinct()
-      val edges = sp
-        .select(col("doc_id"), explode(col("sp.pairs")).as("c"))
-        .select(col("doc_id"), col("c.src").as("src"), col("c.dst").as("dst"))
-      return textrankRankTail(edges, nodes, fused)
-    }
-    val surv0 = documents(s, dir)
-      .select(col("doc_id"), posexplode(wsTokens(lower(col("text"))))
-        .as(Seq("pos", "tok")))
-      .filter(col("tok").rlike(s"^[a-z]{$TrMinLen,}$$") &&
-        !col("tok").isin(trStops: _*))
-    val surv = if (pin) surv0.localCheckpoint() else surv0
-    val nodes = surv.select(col("doc_id"), col("tok").as("node")).distinct()
-    // window-band pairs WITHOUT a self-join: positions are strictly
-    // increasing within a doc, so any co-occurrence within TrWindow
-    // original positions is among the next ≤TrWindow surviving
-    // tokens — lead() gives them in ONE doc-keyed exchange where the
-    // band self-join pays tokens² pre-filter rows per doc (the
-    // measured 5-7 s at sf0.1; lead form ~1.5 s)
-    val byDoc = Window.partitionBy(col("doc_id")).orderBy(col("pos"))
-    val edges = if (stacked) {
-      // two selects: a generator may not share a projection with
-      // window expressions, so the leads land as an array column
-      // first and explode in the next operator
-      surv.select(col("doc_id"), col("pos"), col("tok").as("a"),
-          array((1 to TrWindow).map(k =>
-            struct(lead(col("pos"), k).over(byDoc).as("pb"),
-              lead(col("tok"), k).over(byDoc).as("b"))): _*).as("cand"))
-        .select(col("doc_id"), col("pos"), col("a"),
-          explode(col("cand")).as("c"))
-        .where(col("c.pb").isNotNull && col("c.pb") - col("pos") <= TrWindow &&
-          col("a") =!= col("c.b"))
-        .select(col("doc_id"), col("a").as("src"), col("c.b").as("dst"))
-    } else (1 to TrWindow).map { k =>
-      surv.select(col("doc_id"), col("pos"), col("tok").as("a"),
-          lead(col("pos"), k).over(byDoc).as("pb"),
-          lead(col("tok"), k).over(byDoc).as("b"))
-        .where(col("pb").isNotNull && col("pb") - col("pos") <= TrWindow &&
-          col("a") =!= col("b"))
-        .select(col("doc_id"), col("a").as("src"), col("b").as("dst"))
-    }.reduce(_ unionByName _)
-    textrankRankTail(edges, nodes, fused)
-  }
-
-  /** The un-checkpointed kernel survivor/pairs frame (PlanProbe
-    * `textrank_sp_frame` — the localCheckpoint above hides the
-    * executed kernel plan). */
+  /** The per-doc survivor/pairs frame of the
+    * [[graft.plans.TrSurvPairs]] kernel, for plan probing (PlanProbe
+    * `textrank_sp_frame`) and the distributed rank replay in
+    * TextOpsSpec. */
   private[graft] def trSpFrame(s: SparkSession, dir: String): DataFrame =
     documents(s, dir)
       .select(col("doc_id"),
         call_function("tr_surv_pairs", lower(col("text")),
           lit(TrMinLen), lit(TrWindow),
           lit(trStops.mkString(" "))).as("sp"))
-
-  /** The shared rank tail: symmetrize+weight the edges, TrRounds of
-    * weighted PageRank, top-K per doc. */
-  private def textrankRankTail(edges: DataFrame, nodes: DataFrame,
-                               fused: Boolean): DataFrame = {
-    val symBase = edges.unionByName(
-        edges.select(col("doc_id"), col("dst").as("src"), col("src").as("dst")))
-      .groupBy(col("doc_id"), col("src"), col("dst"))
-      .agg(count(lit(1)).as("w"))
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-
-    val rFinal = if (fused) {
-      // wdeg of the DST endpoint rides the edge row: the graph is
-      // symmetric by construction (u–v and v–u carry the same count),
-      // so the dst-keyed window sum equals the src-keyed degree, and
-      // the per-round aggregate can hand every node its own divisor
-      // for the NEXT round without any join
-      val wdegW = Window.partitionBy(col("doc_id"), col("dst"))
-      val symW = symBase
-        .withColumn("wdeg_dst", sum(col("w")).over(wdegW))
-        .repartition(col("doc_id"), col("src")) // the per-round join key
-        .persist(lvl)
-      val connected = symW
-        .select(col("doc_id"), col("dst").as("node"), col("wdeg_dst").as("wdeg"))
-        .distinct()
-      def step(rank: DataFrame): DataFrame = {
-        val contrib = rank.select(col("doc_id"), col("node").as("src"),
-          expr("r div wdeg").as("rw"))
-        symW.join(contrib, Seq("doc_id", "src"))
-          .groupBy(col("doc_id"), col("dst"), col("wdeg_dst"))
-          .agg(sum(col("w") * col("rw")).as("m"))
-          .select(col("doc_id"), col("dst").as("node"),
-            col("wdeg_dst").as("wdeg"),
-            expr(s"${TrBase}L + (85 * m) div 100").as("r"))
-      }
-      val r0 = connected.withColumn("r", lit(TrScale))
-      val rC = (1 to TrRounds).foldLeft(r0)((r, _) => step(r))
-        .select(col("doc_id"), col("node"), col("r"))
-      // isolated candidates (no surviving co-occurrence partner):
-      // zero incoming mass every round, so for TrRounds >= 1 they sit
-      // at exactly the 0.15 base — no reason to drag them through the
-      // rank loop
-      val isolated = nodes
-        .join(connected.select(col("doc_id"), col("node")),
-          Seq("doc_id", "node"), "left_anti")
-        .select(col("doc_id"), col("node"), lit(TrBase).as("r"))
-      rC.unionByName(isolated)
-    } else {
-      val sym = symBase.persist(lvl)
-      // fresh names on the per-node weight frame: every round joins it
-      // against a frame that descends from the same checkpoints (the
-      // pavFit self-reference lesson)
-      val wdeg = sym.groupBy(col("doc_id"), col("src")).agg(sum(col("w")).as("wdeg"))
-        .select(col("doc_id").as("w_doc"), col("src").as("w_src"), col("wdeg"))
-      def step(rank: DataFrame): DataFrame = {
-        val contrib = rank.join(wdeg,
-            col("doc_id") === col("w_doc") && col("node") === col("w_src"))
-          .select(col("doc_id"), col("w_src").as("src"), expr("r div wdeg").as("rw"))
-        val m = sym.join(contrib, Seq("doc_id", "src"))
-          .groupBy(col("doc_id"), col("dst"))
-          .agg(sum(col("w") * col("rw")).as("m"))
-          .select(col("doc_id").as("m_doc"), col("dst"), col("m"))
-        nodes.join(m,
-            col("doc_id") === col("m_doc") && col("node") === col("dst"),
-            "left_outer")
-          .select(col("doc_id"), col("node"),
-            expr(s"${TrBase}L + (85 * coalesce(m, 0L)) div 100").as("r"))
-      }
-      val r0 = nodes.withColumn("r", lit(TrScale))
-      (1 to TrRounds).foldLeft(r0)((r, _) => step(r))
-    }
-    val w = Window.partitionBy(col("doc_id")).orderBy(col("r").desc, col("node"))
-    rFinal.withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= TrTopK)
-      .select(col("doc_id"), col("node").as("tok"), col("rnk"),
-        col("r").as("rank_pm"))
-  }
 
   lazy val textrankKeywordsSql: String = {
     val stops = trStops.map(t => s"'$t'").mkString(", ")

@@ -40,7 +40,7 @@ object StreamSessionize {
   val GapSec = 1800L
 
   case class Ev(user_id: Long, ts: Timestamp, event_id: Long, value: Double)
-  case class SessState(lastTsMs: Long, sessId: Long)
+  case class SessState(lastTsUs: Long, sessId: Long)
   case class Sess(user_id: Long, sess_id: Long, n_events: Long,
                   sess_start: String, sess_value: Double)
 
@@ -54,23 +54,26 @@ object StreamSessionize {
       state.remove()
       return Iterator.empty
     }
-    val sorted = events.toSeq.sortBy(e => (e.ts.getTime, e.event_id))
+    // event time in whole microseconds, the batch query's unix_micros
+    def micros(ts: Timestamp): Long =
+      Math.floorDiv(ts.getTime, 1000L) * 1000000L + ts.getNanos / 1000
+    val sorted = events.toSeq.sortBy(e => (micros(e.ts), e.event_id))
     if (sorted.isEmpty) return Iterator.empty
-    var (lastMs, sid) = state.getOption
-      .map(s => (s.lastTsMs, s.sessId)).getOrElse((Long.MinValue, -1L))
+    var (lastUs, sid) = state.getOption
+      .map(s => (s.lastTsUs, s.sessId)).getOrElse((Long.MinValue, -1L))
     val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Ev)]
     sorted.foreach { e =>
-      val ms = e.ts.getTime
-      // gap test on floor-seconds, exactly like the batch query's
-      // ts.cast(long) - lag(ts).cast(long) > 1800
-      if (lastMs == Long.MinValue || ms / 1000 - lastMs / 1000 > GapSec) sid += 1
-      lastMs = ms
+      val us = micros(e.ts)
+      // the batch query's gap rule (queries.Analytics.newSession)
+      if (lastUs == Long.MinValue ||
+        us - lastUs > graft.queries.Analytics.SessionGapMicros) sid += 1
+      lastUs = us
       out += ((sid, e))
     }
-    state.update(SessState(lastMs, sid))
-    // lastMs comes from THIS batch's events, so it is >= the current
+    state.update(SessState(lastUs, sid))
+    // lastUs comes from THIS batch's events, so it is >= the current
     // watermark and the armed timestamp is always legal
-    state.setTimeoutTimestamp(lastMs + GapSec * 1000)
+    state.setTimeoutTimestamp(Math.floorDiv(lastUs, 1000L) + GapSec * 1000)
     val sdf = new java.text.SimpleDateFormat(fmt)
     sdf.setTimeZone(java.util.TimeZone.getTimeZone("UTC"))
     out.groupBy(_._1).map { case (s, evs) =>

@@ -78,6 +78,15 @@ class AnalyticsSpec extends SparkSpec {
       Tables.events(spark, sf).count())
     // at least one user has >1 session in a month of events
     assert(sess.groupBy("user_id").count().filter(col("count") > 1).count() > 0)
+    // 00:00:00.900 → 00:30:00.950 is 1800.05 s: past the 30-min gap,
+    // though the whole seconds are exactly 1800 apart
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("sessionize_gap").toString
+    Seq((1L, java.sql.Timestamp.valueOf("2024-01-01 00:00:00.900"), 7L, "view", 1.0, "{}"),
+        (2L, java.sql.Timestamp.valueOf("2024-01-01 00:30:00.950"), 7L, "view", 1.0, "{}"))
+      .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
+      .write.parquet(s"$dir/events.parquet")
+    assert(SparkEntry.queries("sessionize")(spark, dir).count() == 2)
   }
 
   test("semi_anti_join: order-holders without urgent orders, non-empty") {

@@ -620,11 +620,21 @@ class AnnSpec extends SparkSpec {
   }
 
   test("colbert_maxsim: kernel and HOF probe forms are row-identical") {
-    def rows(hof: Boolean) =
-      graft.operators.Ann.colbertMaxsimProbe(spark, sf, hof).collect()
-      .map(r => (r.getAs[Long]("qid"), r.getAs[Long]("nb"),
-        r.getAs[Int]("rnk"), r.getAs[Long]("score"))).toSet
-    assert(rows(hof = true) == rows(hof = false))
+    // every (probe, neighbor) score, not only the top-K the operator keeps
+    import org.apache.spark.sql.functions._
+    import graft.operators.Ann.{CbDim, NumQueries}
+    val q4 = (c: org.apache.spark.sql.Column) =>
+      transform(c, x => floor(x.cast("double") * 10000 + 0.5).cast("long"))
+    val e = Tables.embeddings(spark, sf)
+    val pairs = e.filter(col("vec_id") < NumQueries)
+      .select(col("vec_id").as("qid"), q4(col("embedding")).as("qe4"))
+      .crossJoin(e.select(col("vec_id").as("nb"), q4(col("embedding")).as("ne4")))
+      .select(col("qid"), col("nb"),
+        call_function("maxsim_score", col("qe4"), col("ne4"), lit(CbDim.toLong)).as("ker"),
+        ReferenceForms.maxsimHof(col("qe4"), col("ne4")).as("hof"))
+      .collect()
+    assert(pairs.nonEmpty)
+    pairs.foreach(r => assert(r.getLong(2) == r.getLong(3), s"(${r.getLong(0)}, ${r.getLong(1)})"))
   }
 
   test("label_noise_knn: per-class flag rates replay from the neighbor lists") {

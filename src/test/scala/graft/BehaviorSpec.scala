@@ -1345,9 +1345,10 @@ class BehaviorSpec extends SparkSpec {
 
   test("markov_attribution: driver-absorb and relational forms are " +
     "row-identical (the r13-opt swap)") {
-    val a = graft.queries.Behavior.markovAttributionWith(spark, sf, drv = true)
+    val trans = graft.queries.Behavior.transitionCounts(spark, sf)
+    val a = graft.queries.Behavior.removalEffects(spark, trans)
       .collect().map(_.toSeq).toSet
-    val b = graft.queries.Behavior.markovAttributionWith(spark, sf, drv = false)
+    val b = ReferenceForms.removalEffectsRelational(spark, trans)
       .collect().map(_.toSeq).toSet
     assert(a == b && a.nonEmpty)
   }

@@ -167,4 +167,16 @@ class BenchDriftSpec extends AnyFunSuite {
     assert(warm.nonEmpty)
     assert(warm.values.forall(_ >= 0))
   }
+
+  test("once reports a failing query's root cause, not the wrapper") {
+    val planted: (org.apache.spark.sql.SparkSession, String) =>
+        org.apache.spark.sql.DataFrame = (_, _) =>
+      throw new RuntimeException("job aborted",
+        new IllegalStateException("planted: no such column"))
+    assert(Bench.once(SharedSpark.spark, planted, SharedSpark.sf) ==
+      Left("java.lang.IllegalStateException: planted: no such column"))
+    val ok = Bench.once(SharedSpark.spark,
+      (s, d) => Tables.nation(s, d), SharedSpark.sf)
+    assert(ok.exists(_ >= 0))
+  }
 }

@@ -858,7 +858,7 @@ class CorpusCleanSpec extends SparkSpec {
   }
 
   test("bpe_train array-form loop emits the row-form merges and token frame, bit-for-bit") {
-    val (rowToks, rowMerges) = CorpusClean.bpeTrainRunWith(spark, sf, viaPersist = true)
+    val (rowToks, rowMerges) = ReferenceForms.bpeTrainRowForm(spark, sf)
     val arrMerges = CorpusClean.bpeTrainArrReport(spark, sf)
     assert(arrMerges == rowMerges, s"arr=$arrMerges row=$rowMerges")
     def rows(df: org.apache.spark.sql.DataFrame) = df.collect()

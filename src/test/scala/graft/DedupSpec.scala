@@ -53,7 +53,7 @@ class DedupSpec extends SparkSpec {
         HashFns.shingles(col("text")))).as("h"))
     val agg = HashFns.minhashSigAgg(posts, "doc_id", "h")
       .collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
-    val scalar = HashFns.minhashSigAggScalar(posts, "doc_id", "h")
+    val scalar = ReferenceForms.minhashSigAggScalar(posts, "doc_id", "h")
       .collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
     assert(agg.keySet == scalar.keySet && agg.nonEmpty)
     agg.foreach { case (id, sig) =>
@@ -68,11 +68,9 @@ class DedupSpec extends SparkSpec {
         explode(graft.functions.TextFns.wsTokens(lower(col("text")))).as("t"))
       .select(col("doc_id"), HashFns.strHash(col("t")).as("h"))
     for ((bits, bands) <- Seq((64, 8), (128, 8))) {
-      val ker = HashFns.simhashBandsAggPortableWith(
-          toks, "doc_id", "h", bits, bands, kernel = true)
+      val ker = HashFns.simhashBandsAggPortable(toks, "doc_id", "h", bits, bands)
         .collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
-      val scalar = HashFns.simhashBandsAggPortableWith(
-          toks, "doc_id", "h", bits, bands, kernel = false)
+      val scalar = ReferenceForms.simhashBandsScalar(toks, "doc_id", "h", bits, bands)
         .collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
       assert(ker.keySet == scalar.keySet && ker.nonEmpty)
       ker.foreach { case (id, sb) =>
@@ -84,11 +82,9 @@ class DedupSpec extends SparkSpec {
   test("portableBuckets (SignLshAgg buffer) == retired per-plane scalar form, bit-exact") {
     val e = Tables.embeddings(spark, sf)
     for ((bits, tables) <- Seq((4, 8), (8, 12))) {
-      val ker = graft.functions.VecFns.portableBucketsWith(
-          e, "vec_id", "embedding", bits, tables, kernel = true)
+      val ker = VecFns.portableBuckets(e, "vec_id", "embedding", bits, tables)
         .collect().map(r => (r.getLong(0), r.getInt(1)) -> r.getLong(2)).toMap
-      val scalar = graft.functions.VecFns.portableBucketsWith(
-          e, "vec_id", "embedding", bits, tables, kernel = false)
+      val scalar = ReferenceForms.portableBucketsScalar(e, "vec_id", "embedding", bits, tables)
         .collect().map(r => (r.getLong(0), r.getInt(1)) -> r.getLong(2)).toMap
       assert(ker.keySet == scalar.keySet && ker.nonEmpty)
       ker.foreach { case (k, b) =>
@@ -195,7 +191,8 @@ class DedupSpec extends SparkSpec {
     def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     val local = rows(run("dedup_clusters"))
-    val dist = rows(graft.operators.Dedup.dedupClustersImpl(spark, sf, 0L))
+    val dist = rows(graft.operators.Dedup.dedupClustersOn(spark, sf,
+      graft.operators.Dedup.lshPairsArtifact(spark, sf), 0L))
     assert(local == dist, s"local=${local.size} dist=${dist.size}")
   }
 
@@ -699,9 +696,15 @@ class DedupSpec extends SparkSpec {
   }
 
   test("cdc_chunks: kernel and HOF probe forms are row-identical") {
-    def row(hof: Boolean) = graft.operators.Dedup.cdcChunksProbe(spark, sf, hof)
-      .collect()(0)
-    val a = row(hof = true); val b = row(hof = false)
-    assert((0 until a.length).forall(i => a.get(i) == b.get(i)))
+    // every chunk row derives from the cut list, so equal per-doc cuts
+    // mean equal chunk rows
+    import graft.operators.Dedup.{CdcMask, CdcWin}
+    val t = col("text"); val len = length(t).cast("long")
+    val cuts = Tables.documents(spark, sf).select(col("doc_id"),
+        call_function("cdc_boundaries", t, lit(CdcWin.toLong), lit(CdcMask)).as("ker"),
+        ReferenceForms.cdcBoundariesHof(t, len, CdcWin, CdcMask).as("hof"))
+      .collect()
+    assert(cuts.nonEmpty && cuts.exists(_.getSeq[Long](1).nonEmpty))
+    cuts.foreach(r => assert(r.getSeq[Long](1) == r.getSeq[Long](2), s"doc ${r.getLong(0)}"))
   }
 }

@@ -88,6 +88,19 @@ class ExtensionsSpec extends AnyFunSuite {
       byName("maxsim_score")(Seq(Literal(null), Literal(null), Literal(0L)))
     }
     assert(e2.getMessage.contains("maxsim_score"), e2.getMessage)
+    // an Int-narrowed param past Int.MaxValue would wrap (2^32 + 3
+    // runs as 3); cdc_boundaries' mask keeps the full positive range
+    val tooWide = Literal(4294967299L)
+    for ((fn, args) <- Seq(
+        "token_grams" -> Seq(Literal("x"), tooWide),
+        "token_grams_all" -> Seq(Literal("x"), tooWide),
+        "maxsim_score" -> Seq(Literal(null), Literal(null), tooWide),
+        "cdc_boundaries" -> Seq(Literal("x"), tooWide, Literal(64L)))) {
+      val e3 = intercept[org.apache.spark.sql.AnalysisException](byName(fn)(args))
+      assert(e3.getMessage.contains(fn), e3.getMessage)
+    }
+    assert(byName("cdc_boundaries")(Seq(Literal("x"), Literal(8L), tooWide))
+      .isInstanceOf[graft.plans.CdcBoundaries])
   }
 
   test("shared builders construct the expected expression nodes") {

@@ -31,14 +31,11 @@ class GraphSketchSpec extends SparkSpec {
 
   test("pagerank_iter: probe forms are row-identical (node-side div + " +
     "checkpoints change the plan, never the ranks)") {
-    val forms = Seq("ship", "ckpt", "pre", "art").map { f =>
-      f -> PageRankIter.pagerankIterProbe(spark, sf, f).collect()
-        .map(r => (r.getString(0), r.getLong(1))).toSeq
-    }.toMap
-    assert(forms("ship").nonEmpty)
-    assert(forms("ckpt") == forms("ship"), "ckpt vs ship")
-    assert(forms("pre") == forms("ship"), "pre vs ship")
-    assert(forms("art") == forms("ship"), "art vs ship")
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getString(0), r.getLong(1))).toSeq
+    val r4 = rows(ReferenceForms.pagerankIterR4(spark, sf))
+    assert(r4.nonEmpty)
+    assert(rows(PageRankIter.pagerankIter(spark, sf)) == r4, "shipped vs r4")
   }
 
   test("kmv_merge: merged per-day sketches estimate EXACTLY like the direct sketch") {
@@ -805,11 +802,11 @@ class GraphSketchSpec extends SparkSpec {
       .map(r => (r.getAs[Long]("n"), r.getAs[Long]("lab"), r.getAs[Long]("plab")))
       .sortBy(_._1).toSeq
     assert(art == fresh, "artifact labels diverge from a fresh sweep")
-    // and the probe twin (fresh-sweep louvain_move) reports the same
-    // rows as the artifact-fed default path
+    // and louvain_move over a fresh sweep reports the same rows as
+    // the artifact-fed default path
     val viaArt = run("louvain_move").collect().map(_.toSeq).toSet
     val viaFresh = graft.operators.Graph
-      .louvainMoveWith(spark, sf, viaPersist = false)
+      .louvainMoveOn(spark, sf, graft.operators.Graph.lvLabelsFresh(spark, sf))
       .collect().map(_.toSeq).toSet
     assert(viaArt == viaFresh, "artifact-fed louvain_move diverges")
   }

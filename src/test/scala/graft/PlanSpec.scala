@@ -378,9 +378,10 @@ class PlanSpec extends SparkSpec {
   test("jaccard_neighbors: wedge pairs run on the rank-capped frame, degrees broadcast") {
     // the public operator localCheckpoints (truncating the plan), so
     // assert on the un-checkpointed frame over the same edges
-    val p = graft.operators.Graph
-      .jaccardNeighborsFrame(graft.operators.Graph.coEdges(spark, sf),
-        barrier = false)
+    import graft.operators.Graph
+    val edges = Graph.coEdges(spark, sf)
+    val (deg, ranked) = Graph.jaccardRanked(edges)
+    val p = Graph.jaccardNeighborsOn(edges, deg, ranked)
       .queryExecution.executedPlan.toString
     assert("BroadcastHashJoin".r.findAllIn(p).length >= 2, p)
     assert(!p.contains("CartesianProduct"))

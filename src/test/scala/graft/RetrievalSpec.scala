@@ -175,12 +175,11 @@ class RetrievalSpec extends SparkSpec {
   }
 
   test("mmr_diversify: driver-absorbed greedy emits exactly the relational rows") {
-    def rows(drv: Boolean): Set[(Long, Long, Long, Long)] =
-      graft.operators.Retrieval.mmrDiversifyWith(spark, sf, drv = drv)
-        .collect().map(r => (r.getAs[Long]("qid"), r.getAs[Long]("nb"),
-          r.getAs[Long]("rnk"), r.getAs[Long]("score"))).toSet
-    val drv = rows(drv = true)
-    assert(drv == rows(drv = false))
+    def rows(df: org.apache.spark.sql.DataFrame): Set[(Long, Long, Long, Long)] =
+      df.collect().map(r => (r.getAs[Long]("qid"), r.getAs[Long]("nb"),
+        r.getAs[Long]("rnk"), r.getAs[Long]("score"))).toSet
+    val drv = rows(graft.operators.Retrieval.mmrDiversify(spark, sf))
+    assert(drv == rows(ReferenceForms.mmrDiversifyRelational(spark, sf)))
     assert(drv.nonEmpty)
   }
 }
